@@ -53,7 +53,10 @@ def _lm_register_gram_cache(grams: DataFrame) -> None:
             same = prev._jdf.queryExecution().analyzed().sameResult(
                 grams._jdf.queryExecution().analyzed())
         except Exception:
-            same = False
+            # an unanswerable probe (no _jdf, e.g. Spark Connect) must
+            # not drop a cache the new grams may share — only a
+            # confirmed different plan releases prev
+            same = True
         if not same:
             try:
                 prev.unpersist()
@@ -83,9 +86,10 @@ def _doc_tokens(df: DataFrame, text_col: str) -> Column:
     """Per-document distinct lowercase tokens (binarized/Bernoulli
     counting — robust to token repetition spam).  One-SQL-parse
     tokenizer (r15, VERDICT r14 next #5)."""
-    from .text import _tokens_expr
+    from .text import _tokens
+    from .util import render
 
-    return F.array_distinct(_tokens_expr(text_col, lowercase=True))
+    return F.array_distinct(render(_tokens, text_col, lowercase=True))
 
 
 def nb_train(df: DataFrame, label: Column, text_col: str = "text",
@@ -161,11 +165,11 @@ def _doc_bigrams(text_col: str) -> Column:
     captures `toks` as an unevaluated subexpression and re-tokenizes
     the document for EVERY position — O(n_words^2) regexp splits per
     doc, measured 27 s/pass on the 5k-doc corpus vs ~1 s bound."""
-    from .text import _tokens_expr
-    from .util import bind
+    from .text import _tokens
+    from .util import bind, render
 
     toks = F.concat(
-        F.array(F.lit("<s>")), _tokens_expr(text_col, lowercase=True)
+        F.array(F.lit("<s>")), render(_tokens, text_col, lowercase=True)
     )
 
     def bigrams(t: Column) -> Column:

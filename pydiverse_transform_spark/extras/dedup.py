@@ -16,7 +16,7 @@ import contextlib as _contextlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import fan_out
+from .util import fan_out, render
 
 __all__ = [
     "exact_dedup", "exact_dedup_rows", "word_shingles", "char_shingles",
@@ -70,55 +70,20 @@ def exact_dedup_rows(df: DataFrame, text_col: str = "text",
     )
 
 
-def _sql_ident(name: str) -> str:
-    # dots mean nested access, exactly as in F.col(name)
-    return ".".join("`" + p.replace("`", "``") + "`"
-                    for p in name.split("."))
+def _word_shingles(f, text, k: int):
+    from .text import _words
+    from .util import bind
 
+    def mk(w):
+        # w is the BOUND split result — slicing a captured `words`
+        # inside the transform would re-split the text per shingle
+        n = f.array_size(w)
+        return f.array_distinct(f.transform(
+            f.sequence(f.lit(0), f.greatest(n - k, f.lit(0))),
+            lambda j: f.array_join(f.slice(w, j + 1, k), " "),
+        ))
 
-# SQL-TEXT mirrors of the shingle/minhash expression builders (r14,
-# guide §1.2 step 2 applied to the DRIVER): Column-by-Column
-# construction pays one py4j round-trip per node — 1.4k gateway
-# commands (~0.25 s) per _minhash_buckets_sig build; each mirror
-# parses as ONE F.expr.  They must stay in LOCKSTEP with the Column
-# forms below (equality pinned by tests/test_r14_opt.py A/B and the
-# minhash fuzz suites).
-
-def _word_shingles_sql(text: str, k: int) -> str:
-    words = (f"split(lower(regexp_replace(coalesce({text}, ''), "
-             f"'^\\\\s+|\\\\s+$', '')), '\\\\s+')")
-    mk = (f"array_distinct(transform("
-          f"sequence(0, greatest(array_size(s.v) - {k}, 0)), "
-          f"j -> array_join(slice(s.v, j + 1, {k}), ' ')))")
-    return (f"element_at(transform(array(named_struct('v', {words})), "
-            f"s -> {mk}), 1)")
-
-
-def _char_shingles_sql(text: str, k: int) -> str:
-    t = (f"lower(regexp_replace(coalesce({text}, ''), '\\\\s+', ' '))")
-    mk = (f"array_distinct(transform("
-          f"sequence(1, greatest(length(s.v) - {k} + 1, 1)), "
-          f"j -> substring(s.v, j, {k})))")
-    return (f"element_at(transform(array(named_struct('v', {t})), "
-            f"s -> {mk}), 1)")
-
-
-def _shingle_base_hash_sql(sh: str) -> str:
-    return (f"transform({sh}, s -> "
-            f"cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint))")
-
-
-def _minhash_signature_array_sql(base: str, n_hashes: int) -> str:
-    from .util import lit_num_array_sql
-
-    a_arr = lit_num_array_sql(MINHASH_A[:n_hashes], "bigint")
-    b_arr = lit_num_array_sql(MINHASH_B[:n_hashes], "bigint")
-    init = f"array_repeat(cast({MINHASH_P} as bigint), {n_hashes})"
-    idx = f"sequence(0, {n_hashes - 1})"
-    return (f"aggregate({base}, {init}, (acc, h) -> "
-            f"zip_with(acc, {idx}, (m, i) -> least(m, "
-            f"(h * element_at({a_arr}, i + 1) "
-            f"+ element_at({b_arr}, i + 1)) % {MINHASH_P})))")
+    return bind(_words(f, text), mk, f)
 
 
 def word_shingles(text: Column | str, k: int = 3) -> Column:
@@ -131,54 +96,31 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     found by tests/test_fuzz_extras.py.
 
     A ``str`` argument is a column NAME: the whole expression then
-    parses as one SQL string (r14 — ~8x fewer py4j round-trips).
-    Guarded on the session's string-literal parsing mode (r15, ADVICE
-    r14): under legacy ``escapedStringLiterals=true`` the SQL text's
-    regex escapes would parse differently, so the Column form is built
-    instead — identical values either way."""
-    from .util import bind, sql_regex_mirrors_usable
+    parses as one SQL string (r14 — ~8x fewer py4j round-trips)."""
+    return render(_word_shingles, text, k)
 
-    if isinstance(text, str):
-        if sql_regex_mirrors_usable():
-            return F.expr(_word_shingles_sql(_sql_ident(text), k))
-        text = F.col(text)
-    text = F.coalesce(text, F.lit(""))
-    words = F.split(F.lower(F.regexp_replace(text, r"^\s+|\s+$", "")), r"\s+")
 
-    def mk(w: Column) -> Column:
-        # w is the BOUND split result — slicing a captured `words`
-        # inside the transform would re-split the text per shingle
-        n = F.array_size(w)
-        return F.array_distinct(F.transform(
-            F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-            lambda j: F.array_join(F.slice(w, j + 1, k), " "),
+def _char_shingles(f, text, k: int):
+    from .util import WS_CLASS, bind
+
+    t = f.lower(f.regexp_replace(f.coalesce(text, f.lit("")),
+                                 WS_CLASS + "+", " "))
+
+    def mk(s):
+        n = f.length(s)
+        return f.array_distinct(f.transform(
+            f.sequence(f.lit(1), f.greatest(n - k + 1, f.lit(1))),
+            lambda j: f.substring(s, j, k),
         ))
 
-    return bind(words, mk)
+    return bind(t, mk, f)
 
 
 def char_shingles(text: Column | str, k: int = 5) -> Column:
     """k-character shingles (deduplicated).  NULL docs coalesce to ''
     like word_shingles — engine-independent [''] instead of [NULL].
-    A ``str`` argument is a column NAME (one-SQL-parse form, r14);
-    falls back to the Column form under legacy
-    ``escapedStringLiterals=true`` (r15, ADVICE r14)."""
-    from .util import bind, sql_regex_mirrors_usable
-
-    if isinstance(text, str):
-        if sql_regex_mirrors_usable():
-            return F.expr(_char_shingles_sql(_sql_ident(text), k))
-        text = F.col(text)
-    t = F.lower(F.regexp_replace(F.coalesce(text, F.lit("")), r"\s+", " "))
-
-    def mk(s: Column) -> Column:
-        n = F.length(s)
-        return F.array_distinct(F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda j: F.substring(s, j, k),
-        ))
-
-    return bind(t, mk)
+    A ``str`` argument is a column NAME (one-SQL-parse form, r14)."""
+    return render(_char_shingles, text, k)
 
 
 # affine minhash family over one md5-derived 32-bit base hash per shingle:
@@ -190,15 +132,17 @@ MINHASH_A = [2 * i + 1 for i in range(1, 65)]  # odd multipliers
 MINHASH_B = [7_368_787 * (i + 1) % MINHASH_P for i in range(64)]
 
 
+def _shingle_base_hash(f, shingles):
+    return f.transform(
+        shingles,
+        lambda s: f.conv(f.substring(f.md5(s), 1, 8), 16, 10).cast("long"),
+    )
+
+
 def shingle_base_hash(shingles: Column | str) -> Column:
     """array<long>: first 8 md5 hex chars of each shingle as a 32-bit
     int.  A ``str`` argument is a column NAME (one-SQL-parse form)."""
-    if isinstance(shingles, str):
-        return F.expr(_shingle_base_hash_sql(_sql_ident(shingles)))
-    return F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
+    return render(_shingle_base_hash, shingles)
 
 
 def minhash_value(base_hashes: Column, i: int) -> Column:
@@ -217,6 +161,26 @@ def minhash_signature(shingles: Column, n_hashes: int = 16) -> list[Column]:
     return [minhash_value(base, i) for i in range(n_hashes)]
 
 
+def _minhash_signature_array(f, base_hashes, n_hashes: int):
+    from .util import lit_num_array
+
+    a_arr = lit_num_array(MINHASH_A[:n_hashes], "bigint", f)
+    b_arr = lit_num_array(MINHASH_B[:n_hashes], "bigint", f)
+    init = f.array_repeat(f.lit(MINHASH_P).cast("long"), n_hashes)
+    idx = f.sequence(f.lit(0), f.lit(n_hashes - 1))
+    return f.aggregate(
+        base_hashes, init,
+        lambda acc, h: f.zip_with(
+            acc, idx,
+            lambda m, i: f.least(
+                m,
+                (h * f.element_at(a_arr, i + 1)
+                 + f.element_at(b_arr, i + 1)) % f.lit(MINHASH_P),
+            ),
+        ),
+    )
+
+
 def minhash_signature_array(base_hashes: Column | str,
                             n_hashes: int = 16) -> Column:
     """All ``n_hashes`` minhash values in ONE pass over the shingle-hash
@@ -224,28 +188,21 @@ def minhash_signature_array(base_hashes: Column | str,
     values to ``minhash_value(base, i)`` per position, but one traversal
     instead of ``n_hashes`` and ~n_hashes× less generated code (the 16
     separate array_min(transform(...)) columns dominated codegen compile
-    time on first run)."""
-    from .util import lit_num_array
+    time on first run).  A ``str`` argument is a column NAME
+    (one-SQL-parse form, r14)."""
+    return render(_minhash_signature_array, base_hashes, n_hashes)
 
-    if isinstance(base_hashes, str):
-        # column-NAME form: one SQL parse (r14)
-        return F.expr(_minhash_signature_array_sql(
-            _sql_ident(base_hashes), n_hashes))
-    a_arr = lit_num_array(MINHASH_A[:n_hashes], "bigint")
-    b_arr = lit_num_array(MINHASH_B[:n_hashes], "bigint")
-    init = F.array_repeat(F.lit(MINHASH_P).cast("long"), n_hashes)
-    idx = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    return F.aggregate(
-        base_hashes, init,
-        lambda acc, h: F.zip_with(
-            acc, idx,
-            lambda m, i: F.least(
-                m,
-                (h * F.element_at(a_arr, i + 1)
-                 + F.element_at(b_arr, i + 1)) % F.lit(MINHASH_P),
-            ),
-        ),
-    )
+
+def _shingle_signature(f, shingles, n_hashes: int):
+    """Spec: base hash + signature fold over a shingle array."""
+    return _minhash_signature_array(f, _shingle_base_hash(f, shingles),
+                                    n_hashes)
+
+
+def _band_hash(f, sig, start: int, rows: int):
+    return f.md5(f.array_join(
+        f.transform(f.slice(sig, start, rows), lambda m: m.cast("string")),
+        "|"))
 
 
 def _banded(sig_df: DataFrame, id_col: str, n_hashes: int, bands: int,
@@ -257,15 +214,11 @@ def _banded(sig_df: DataFrame, id_col: str, n_hashes: int, bands: int,
     rows = n_hashes // bands
     keep = [F.col(id_col)] + ([F.col(sig_col).alias("sig")] if keep_sig
                               else [])
-    sq = _sql_ident(sig_col)
     withb = sig_df.select(
         *keep,
         *[
             # one SQL parse per band hash (r14)
-            F.expr(
-                f"md5(array_join(transform(slice({sq}, "
-                f"{b * rows + 1}, {rows}), "
-                f"m -> cast(m as string)), '|'))").alias(f"b{b}")
+            render(_band_hash, sig_col, b * rows + 1, rows).alias(f"b{b}")
             for b in range(bands)
         ],
     )
@@ -1415,9 +1368,7 @@ def _minhash_buckets_sig(df: DataFrame, text_col: str, id_col: str,
     sig_df = sh.select(
         F.col(id_col),
         # base-hash + 16-wide signature fold as ONE SQL parse (r14)
-        F.expr(_minhash_signature_array_sql(
-            _shingle_base_hash_sql(_sql_ident("__sh")),
-            n_hashes)).alias("sig"),
+        render(_shingle_signature, "__sh", n_hashes).alias("sig"),
     )
     return _banded(sig_df, id_col, n_hashes, bands, "sig",
                    keep_sig=True)

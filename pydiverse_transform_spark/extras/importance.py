@@ -46,44 +46,28 @@ __all__ = [
 ]
 
 
-def _tokens(text: Column) -> Column:
-    """Whitespace tokens, the package-wide convention (extras/text.py):
-    trim -> lower -> split on \\s+."""
-    t = F.coalesce(text, F.lit(""))
-    return F.split(
-        F.lower(F.regexp_replace(t, r"^\s+|\s+$", "")), r"\s+"
-    )
+def _hashed_ngram_buckets(f, text, n_buckets: int, bigrams: bool):
+    from .text import _words
+    from .util import bind
 
+    def bucket(gram):
+        return (f.conv(f.substring(f.md5(gram), 1, 8), 16, 10)
+                .cast("long") % f.lit(n_buckets))
 
-def _sql_ident(name: str) -> str:
-    # dots mean nested access, exactly as in F.col(name)
-    return ".".join("`" + p.replace("`", "``") + "`"
-                    for p in name.split("."))
+    def build(toks):
+        unis = f.transform(toks, bucket)
+        if not bigrams:
+            return unis
+        n = f.size(toks)
+        bis = f.transform(
+            f.slice(toks, 1, f.greatest(n - 1, f.lit(0))),
+            lambda w, i: bucket(
+                f.concat(w, f.lit(" "), f.element_at(toks, i + 2))
+            ),
+        )
+        return f.concat(unis, bis)
 
-
-def _bucket_sql(gram: str, n_buckets: int) -> str:
-    return (f"cast(conv(substring(md5({gram}), 1, 8), 16, 10) "
-            f"as bigint) % {n_buckets}")
-
-
-def _hashed_ngram_buckets_sql(text: str, n_buckets: int,
-                              bigrams: bool) -> str:
-    """SQL-text mirror of :func:`hashed_ngram_buckets` — ONE F.expr
-    parse instead of ~450 py4j round-trips per build (r14); stays in
-    lockstep with the Column form below (A/B-pinned in
-    tests/test_r14_opt.py)."""
-    toks = (f"split(lower(regexp_replace(coalesce({text}, ''), "
-            f"'^\\\\s+|\\\\s+$', '')), '\\\\s+')")
-    unis = f"transform(s.v, g -> {_bucket_sql('g', n_buckets)})"
-    if bigrams:
-        bi_gram = "concat(w, ' ', element_at(s.v, i + 2))"
-        bis = (f"transform(slice(s.v, 1, greatest(size(s.v) - 1, 0)), "
-               f"(w, i) -> {_bucket_sql(bi_gram, n_buckets)})")
-        body = f"concat({unis}, {bis})"
-    else:
-        body = unis
-    return (f"element_at(transform(array(named_struct('v', {toks})), "
-            f"s -> {body}), 1)")
+    return bind(_words(f, text), build, f)
 
 
 def hashed_ngram_buckets(text: Column | str, n_buckets: int = 4096,
@@ -96,35 +80,10 @@ def hashed_ngram_buckets(text: Column | str, n_buckets: int = 4096,
     Pure Catalyst expressions; the token array is lambda-bound so the
     bigram builder reads ONE tokenization (the r5 ``bind()``
     discipline — an unbound captured split re-tokenizes per gram).
-    A ``str`` argument is a column NAME (one-SQL-parse form, r14);
-    falls back to the Column form under legacy
-    ``escapedStringLiterals=true`` (r15, ADVICE r14)."""
-    from .util import bind, sql_regex_mirrors_usable
+    A ``str`` argument is a column NAME (one-SQL-parse form, r14)."""
+    from .util import render
 
-    if isinstance(text, str):
-        if sql_regex_mirrors_usable():
-            return F.expr(_hashed_ngram_buckets_sql(
-                _sql_ident(text), n_buckets, bigrams))
-        text = F.col(text)
-
-    def bucket(gram: Column) -> Column:
-        return (F.conv(F.substring(F.md5(gram), 1, 8), 16, 10)
-                .cast("long") % F.lit(n_buckets))
-
-    def build(toks: Column) -> Column:
-        unis = F.transform(toks, bucket)
-        if not bigrams:
-            return unis
-        n = F.size(toks)
-        bis = F.transform(
-            F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-            lambda w, i: bucket(
-                F.concat(w, F.lit(" "), F.element_at(toks, i + 2))
-            ),
-        )
-        return F.concat(unis, bis)
-
-    return bind(_tokens(text), build)
+    return render(_hashed_ngram_buckets, text, n_buckets, bigrams)
 
 
 def bucket_counts(df: DataFrame, text_col: str = "text",
@@ -175,40 +134,30 @@ def importance_weight(text: Column | str, log_ratios: list[float],
     the plan — scoring is map-only (one lookup + one add per gram),
     zero joins, zero shuffles; same broadcast-model shape as
     ``classify.lm_score`` but without even the broadcast."""
-    from .util import bind, lit_num_array
+    from .util import render
 
     n_buckets = n_buckets or len(log_ratios)
     if n_buckets != len(log_ratios):
         raise ValueError(
             f"n_buckets={n_buckets} != len(log_ratios)={len(log_ratios)}")
+    return render(_importance_weight, text, log_ratios, n_buckets, bigrams)
+
+
+def _importance_weight(f, text, log_ratios: list[float], n_buckets: int,
+                       bigrams: bool):
+    from .util import bind, lit_num_array
+
     # one foldable literal instead of a 4096-child CreateArray: the
     # per-build analyzer walk of the element-wise form dominated
     # q_dsir_sample's bench row (r14, util.lit_num_array docstring)
-    if isinstance(text, str):
-        from .util import lit_num_array_sql, sql_regex_mirrors_usable
-
-        if sql_regex_mirrors_usable():
-            # column-NAME form: the whole featurize+score expression
-            # is ONE SQL parse (r14)
-            lut_sql = lit_num_array_sql(log_ratios, "double")
-            buckets_sql = _hashed_ngram_buckets_sql(
-                _sql_ident(text), n_buckets, bigrams)
-            return F.expr(
-                f"element_at(transform(array(named_struct('v', "
-                f"{buckets_sql})), s -> aggregate(s.v, 0.0D, (acc, b) "
-                f"-> acc + element_at({lut_sql}, cast(b as int) + 1))),"
-                f" 1)")
-        # legacy escapedStringLiterals sessions: the SQL text's regex
-        # escapes would parse differently — build the Column form
-        text = F.col(text)
-    lut = lit_num_array(log_ratios, "double")
-    buckets = hashed_ngram_buckets(text, n_buckets, bigrams)
+    lut = lit_num_array(log_ratios, "double", f)
     return bind(
-        buckets,
-        lambda bs: F.aggregate(
-            bs, F.lit(0.0),
-            lambda acc, b: acc + F.element_at(lut, b.cast("int") + 1),
+        _hashed_ngram_buckets(f, text, n_buckets, bigrams),
+        lambda bs: f.aggregate(
+            bs, f.lit(0.0),
+            lambda acc, b: acc + f.element_at(lut, b.cast("int") + 1),
         ),
+        f,
     )
 
 

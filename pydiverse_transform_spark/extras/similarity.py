@@ -22,6 +22,8 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import render
+
 _log = logging.getLogger(__name__)
 
 __all__ = ["dot", "norm", "cosine", "cosine_topk", "hyperplanes",
@@ -41,70 +43,12 @@ __all__ = ["dot", "norm", "cosine", "cosine_topk", "hyperplanes",
            "opq_permutation", "permute_vec", "embedding_filter_new"]
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
+def dot(a: Column, b: Column, f=F) -> Column:
+    return f.aggregate(
+        f.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        f.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-# ---------------------------------------------------------------------------
-# SQL-TEXT builders for the hot quantizer expressions (r14, guide §1.2
-# step 2 applied to the DRIVER).  Column-by-Column construction of the
-# literal-centroid argmin costs one py4j round-trip per node — measured
-# 616 gateway commands per kmeans_cell call (6k per pq_encode, ~1 s of
-# socket chatter per fresh q_pq_topk plan).  Building the SAME
-# expression as one SQL string and parsing it with a single F.expr call
-# costs 3 round-trips; the parsed tree is semantically identical
-# (equality pinned by the literal-vs-numpy fuzz suites and the DuckDB
-# oracle twins).  These mirror dot/_sq_l2/_cent_lit/kmeans_cell/
-# ivf_cell EXACTLY — change them in lockstep.
-# ---------------------------------------------------------------------------
-
-def _sql_ident(name: str) -> str:
-    # dots mean nested access, exactly as in F.col(name)
-    return ".".join("`" + p.replace("`", "``") + "`"
-                    for p in name.split("."))
-
-
-def _lit_num_array_sql(values, eltype: str = "double") -> str:
-    """SQL text of :func:`util.lit_num_array` (same split+cast form,
-    same constant folding to a genuine array Literal)."""
-    from .util import lit_num_array_sql
-
-    return lit_num_array_sql(values, eltype)
-
-
-def _cent_lit_sql(centroids) -> str:
-    return "array(" + ", ".join(
-        _lit_num_array_sql([float(v) for v in cen], "double")
-        for cen in centroids) + ")"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"cast(x as double) * cast(y as double)), 0.0D, "
-            f"(acc, v) -> acc + v)")
-
-
-def _sq_l2_sql(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"(cast(x as double) - cast(y as double)) * "
-            f"(cast(x as double) - cast(y as double))), 0.0D, "
-            f"(acc, v) -> acc + v)")
-
-
-def _kmeans_cell_sql(vec: str, centroids) -> str:
-    d = (f"transform({_cent_lit_sql(centroids)}, "
-         f"c -> {_sq_l2_sql(vec, 'c')})")
-    return f"cast(array_position({d}, array_min({d})) - 1 as int)"
-
-
-def _ivf_cell_sql(vec: str, centroids) -> str:
-    s = (f"transform({_cent_lit_sql(centroids)}, "
-         f"c -> {_dot_sql(vec, 'c')})")
-    return f"cast(array_position({s}, array_max({s})) - 1 as int)"
 
 
 def norm(a: Column) -> Column:
@@ -315,14 +259,16 @@ def ivf_cell(vec: Column | str,
     (b) the centroids are a literal nested-array looped by `transform`
     at RUNTIME, not unrolled into n_cells copies of the dot product —
     unrolling generated ~1 MB task binaries and seconds of codegen per
-    query at realistic sizes."""
-    if isinstance(vec, str):
-        # column-NAME form: the whole argmax parses as ONE SQL
-        # expression — 3 py4j round-trips instead of ~600 (r14)
-        return F.expr(_ivf_cell_sql(_sql_ident(vec), centroids))
-    cens = _cent_lit(centroids)
-    scores = F.transform(cens, lambda c: dot(vec, c))
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    query at realistic sizes.
+
+    A ``str`` argument is a column NAME: the whole argmax then parses
+    as ONE SQL expression — 3 py4j round-trips instead of ~600 (r14)."""
+    return render(_ivf_cell, vec, centroids)
+
+
+def _ivf_cell(f, vec, centroids):
+    scores = f.transform(_cent_lit(centroids, f), lambda c: dot(vec, c, f))
+    return (f.array_position(scores, f.array_max(scores)) - 1).cast("int")
 
 
 def _query_probe_cells(query_vec, centroids, nprobe: int,
@@ -436,15 +382,15 @@ def signlsh_topk(df: DataFrame, query_vec: list[float], k: int = 10,
 #   plan-building queries stay job-free.
 
 
-def _sq_l2(a: Column, b: Column) -> Column:
+def _sq_l2(a: Column, b: Column, f=F) -> Column:
     """Squared L2 distance in float64 (zip_with/aggregate, JVM-side)."""
-    return F.aggregate(
-        F.zip_with(
+    return f.aggregate(
+        f.zip_with(
             a, b,
             lambda x, y: (x.cast("double") - y.cast("double"))
             * (x.cast("double") - y.cast("double")),
         ),
-        F.lit(0.0),
+        f.lit(0.0),
         lambda acc, v: acc + v,
     )
 
@@ -459,14 +405,17 @@ def kmeans_cell(vec: Column | str,
     array, `array_position` of the min, centroids runtime-looped via
     `transform` over a literal nested array): the when-chain fold is
     exponential in k and stalls the analyzer at realistic k, and
-    unrolled per-centroid expressions bloat codegen ~k-fold."""
-    if isinstance(vec, str):
-        # column-NAME form: one SQL parse instead of ~600 py4j
-        # round-trips of Column composition (r14)
-        return F.expr(_kmeans_cell_sql(_sql_ident(vec), centroids))
-    cens = _cent_lit(centroids)
-    dists = F.transform(cens, lambda c: _sq_l2(vec, c))
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    unrolled per-centroid expressions bloat codegen ~k-fold.
+
+    A ``str`` argument is a column NAME: one SQL parse instead of ~600
+    py4j round-trips of Column composition (r14)."""
+    return render(_kmeans_cell, vec, centroids)
+
+
+def _kmeans_cell(f, vec, centroids):
+    dists = f.transform(_cent_lit(centroids, f),
+                        lambda c: _sq_l2(vec, c, f))
+    return (f.array_position(dists, f.array_min(dists)) - 1).cast("int")
 
 
 def kmeans_seed_centroids(df: DataFrame, k: int,
@@ -1164,11 +1113,7 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     Contract (both paths, fuzz-pinned in tests/test_pq.py): ties to
     the LOWEST code id; a null vector or one whose length differs from
     m x dsub yields a code array of m nulls."""
-    from .util import bind
-
-    m = len(codebooks)
     k_codes = len(codebooks[0])
-    dsub = len(codebooks[0][0])
     if method not in ("auto", "literal", "numpy"):
         raise ValueError(f"method must be auto|literal|numpy, "
                          f"got {method!r}")
@@ -1176,32 +1121,32 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
         method = "literal" if k_codes <= 256 else "numpy"
     if method == "numpy":
         return _pq_encode_numpy(df, codebooks, vec_col, code_col)
-    vecq = _sql_ident(vec_col)
+    # the whole code expression is ONE SQL parse (r14): a
+    # Column-by-Column build pays ~6k py4j round-trips (~1 s) per
+    # fresh plan
+    code = render(_pq_code, vec_col, codebooks)
+    return df.withColumn(code_col, code)
+
+
+def _pq_code(f, vec, codebooks):
+    """Spec of the literal PQ code: the bind-struct of the m sub-vector
+    slices, then a per-subspace :func:`kmeans_cell` argmin."""
+    from .util import bind
+
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
     # bind the m sub-vector slices once — a slice captured inside
-    # kmeans_cell's per-centroid transform would re-slice k times.
-    # The whole code expression is ONE SQL parse (r14): the previous
-    # Column-by-Column build paid ~6k py4j round-trips (~1 s of
-    # driver socket chatter) per fresh plan; the parsed tree is the
-    # same bind-struct + per-subspace argmin shape.
-    slices_sql = ", ".join(
-        f"'s{j}', slice({vecq}, {j * dsub + 1}, {dsub})"
-        for j in range(m))
-    body = "array(" + ", ".join(
-        _kmeans_cell_sql(f"s.v.s{j}", codebooks[j]) for j in range(m)
-    ) + ")"
-    code_sql = (
-        f"element_at(transform(array(named_struct('v', "
-        f"named_struct({slices_sql}))), s -> {body}), 1)")
+    # kmeans_cell's per-centroid transform would re-slice k times
+    slices = f.struct(*[f.slice(vec, j * dsub + 1, dsub).alias(f"s{j}")
+                        for j in range(m)])
+    code = bind(slices, lambda s: f.array(*[
+        _kmeans_cell(f, s[f"s{j}"], codebooks[j]) for j in range(m)]), f)
     # wrong-LENGTH vectors would otherwise encode their full leading
     # subspaces and null the rest — gate to the all-null contract the
     # numpy path implements (a null vector already null-propagates to
     # m nulls through the slices)
-    nulls_sql = "array(" + ", ".join(
-        ["cast(null as int)"] * m) + ")"
-    code = F.expr(
-        f"CASE WHEN size({vecq}) = {m * dsub} THEN {code_sql} "
-        f"ELSE {nulls_sql} END")
-    return df.withColumn(code_col, code)
+    return f.when(f.size(vec) == m * dsub, code).otherwise(
+        f.array(*[f.lit(None).cast("int")] * m))
 
 
 def _pq_encode_numpy(df: DataFrame, codebooks, vec_col: str,
@@ -1316,13 +1261,7 @@ def pq_fit(df: DataFrame, m: int = 8, k: int = 16, n_iter: int = 5,
             # one SQL parse for the whole per-subspace inline array
             # (r14): the per-j Column build paid ~600 py4j round-trips
             # per subspace PER FIT ITERATION
-            vq = _sql_ident(vec_col)
-            entries_sql = ", ".join(
-                f"named_struct('sub', {j}, "
-                f"'cid', {_kmeans_cell_sql(f'slice({vq}, {j * dsub + 1}, {dsub})', books[j])}, "
-                f"'s', slice({vq}, {j * dsub + 1}, {dsub}))"
-                for j in range(m))
-            ex = base.select(F.expr(f"inline(array({entries_sql}))"))
+            ex = base.select(render(_pq_sub_cells, vec_col, books))
         rows = (
             ex.filter(F.col("cid").isNotNull())
             .select("sub", "cid", F.posexplode(F.col("s")).alias("pos", "v"))
@@ -2395,6 +2334,20 @@ def permute_vec(vec: Column, perm: list[int]) -> Column:
     return F.array(*[F.element_at(vec, int(i) + 1) for i in perm])
 
 
+def _pq_sub_cells(f, vec, books):
+    """Spec: one (sub, cid, s) row per subspace — the sub-vector ``s``
+    and its nearest sub-centroid ``cid`` — as an ``inline`` generator."""
+    dsub = len(books[0][0])
+
+    def entry(j):
+        sub = f.slice(vec, j * dsub + 1, dsub)
+        return f.struct(f.lit(j).alias("sub"),
+                        _kmeans_cell(f, sub, books[j]).alias("cid"),
+                        sub.alias("s"))
+
+    return f.inline(f.array(*[entry(j) for j in range(len(books))]))
+
+
 def _adc_dist(query_vec: list[float], codebooks: list[list[list[float]]],
               code_col: str) -> Column:
     """Asymmetric-distance expression over a code column: per subspace,
@@ -2409,13 +2362,21 @@ def _adc_dist(query_vec: list[float], codebooks: list[list[list[float]]],
          for cen in codebooks[j]]
         for j in range(m)
     ]
-    codeq = _sql_ident(code_col)
-    # one SQL parse for the whole m-term sum (r14): left-assoc `+`
-    # chain, identical tree to the previous per-term Column build
-    return F.expr(" + ".join(
-        f"element_at({_lit_num_array_sql(luts[j], 'double')}, "
-        f"element_at({codeq}, {j + 1}) + 1)"
-        for j in range(m)))
+    # one SQL parse for the whole m-term sum (r14)
+    return render(_adc_sum, code_col, luts)
+
+
+def _adc_sum(f, code, luts):
+    """Spec: left-assoc sum over subspaces of the LUT entry the code
+    selects."""
+    from functools import reduce
+    from operator import add
+
+    from .util import lit_num_array
+
+    return reduce(add, [f.element_at(lit_num_array(lut, "double", f),
+                                     f.element_at(code, j + 1) + 1)
+                        for j, lut in enumerate(luts)])
 
 
 def pq_topk_coded(df: DataFrame, query_vec: list[float],
@@ -2494,13 +2455,13 @@ def pq_topk(df: DataFrame, query_vec: list[float], k: int = 10,
 # bounded pool.
 # ---------------------------------------------------------------------------
 
-def _cent_lit(centroids: list[list[float]]) -> Column:
+def _cent_lit(centroids: list[list[float]], f=F) -> Column:
     from .util import lit_num_array
 
     # k foldable row literals under one CreateArray (k children) —
     # the element-wise form walked k x dim literal children per build
-    return F.array(*[
-        lit_num_array([float(v) for v in cen], "double")
+    return f.array(*[
+        lit_num_array([float(v) for v in cen], "double", f)
         for cen in centroids
     ])
 

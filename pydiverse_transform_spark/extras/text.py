@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import WS_CLASS, render, ws_trim
+
 __all__ = [
     "tokens", "token_count", "char_count", "punct_ratio", "digit_ratio",
     "whitespace_ratio", "stopword_ratio", "quality_score", "lang_id",
@@ -35,42 +37,21 @@ STOPWORDS = {
 }
 
 
-def _sql_ident(name: str) -> str:
-    # dots mean nested access, exactly as in F.col(name)
-    return ".".join("`" + p.replace("`", "``") + "`"
-                    for p in name.split("."))
+def _tokens(f, text, lowercase: bool = False):
+    """Spec of :func:`tokens` (``util.render``), optionally over the
+    lowercased text."""
+    if lowercase:
+        text = f.lower(text)
+    t = ws_trim(f, text)
+    return f.when(f.length(t) == 0, f.array().cast("array<string>")
+                  ).otherwise(f.split(t, WS_CLASS + "+"))
 
 
-def _tokens_sql(expr: str) -> str:
-    """SQL-text mirror of :func:`tokens` over an arbitrary SQL
-    expression string (r15, guide §7.3 driver cost / VERDICT r14 next
-    #5): the Column form costs ~77 py4j round-trips per build and the
-    tokenizer is built 2-4x per query in the nb/tfidf/doc-stats
-    family; this parses as ONE ``F.expr``.  Must stay in LOCKSTEP with
-    the Column form below (A/B-pinned in tests/test_r15_opt.py).  The
-    trimmed string is spelled twice, exactly like the Column form's
-    ``when(length(t) == 0, ...).otherwise(split(t, ...))`` references
-    ``t`` twice — identical expression shape, identical values."""
-    t = f"regexp_replace({expr}, '^\\\\s+|\\\\s+$', '')"
-    return (f"CASE WHEN length({t}) = 0 "
-            f"THEN cast(array() as array<string>) "
-            f"ELSE split({t}, '\\\\s+') END")
-
-
-def _tokens_expr(text_col: str, lowercase: bool = False) -> Column:
-    """:func:`tokens` over a NAMED column (optionally lowercased) as
-    one SQL parse; falls back to the Column builder under legacy
-    ``escapedStringLiterals=true`` sessions (ADVICE r14) — identical
-    values either way."""
-    from .util import sql_regex_mirrors_usable
-
-    if sql_regex_mirrors_usable():
-        e = _sql_ident(text_col)
-        if lowercase:
-            e = f"lower({e})"
-        return F.expr(_tokens_sql(e))
-    t = F.col(text_col)
-    return tokens(F.lower(t) if lowercase else t)
+def _words(f, text):
+    """Spec: lowercase whitespace words of the trimmed text, NULL read
+    as '' — the shingle and hashed-n-gram tokenization."""
+    return f.split(f.lower(ws_trim(f, f.coalesce(text, f.lit("")))),
+                   WS_CLASS + "+")
 
 
 def tokens(text: Column | str) -> Column:
@@ -78,12 +59,7 @@ def tokens(text: Column | str) -> Column:
     array.  A ``str`` argument is a column NAME: the expression then
     parses as one SQL string (r15 — one py4j round-trip instead of
     ~77)."""
-    if isinstance(text, str):
-        return _tokens_expr(text)
-    t = F.regexp_replace(text, r"^\s+|\s+$", "")
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    return render(_tokens, text)
 
 
 def token_count(text: Column) -> Column:
@@ -227,7 +203,7 @@ def doc_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     from .util import fan_out
 
     tokenized = fan_out(df).withColumn(
-        "__ltoks", _tokens_expr(text_col, lowercase=True))
+        "__ltoks", render(_tokens, text_col, lowercase=True))
     ltoks = F.col("__ltoks")
     staged = tokenized.withColumns({
         "__n_tok": F.array_size(ltoks).cast("long"),
@@ -455,8 +431,8 @@ def gopher_quality(df: DataFrame, text_col: str = "text", *,
     # stage the split arrays through a projection boundary so each is
     # computed once, then derive every metric from the SAME arrays
     arrayed = fan_out(df).withColumns({
-        "__toks": _tokens_expr(text_col),
-        "__ltoks": _tokens_expr(text_col, lowercase=True),
+        "__toks": render(_tokens, text_col),
+        "__ltoks": render(_tokens, text_col, lowercase=True),
         "__lines": _lines(t),
     })
     staged = arrayed.withColumns(_gopher_metric_exprs(
@@ -510,8 +486,8 @@ def gopher_filter(df: DataFrame, text_col: str = "text",
     t = F.col(text_col)
     bound = F.struct(
         t.alias("raw"),
-        _tokens_expr(text_col).alias("toks"),
-        _tokens_expr(text_col, lowercase=True).alias("ltoks"),
+        render(_tokens, text_col).alias("toks"),
+        render(_tokens, text_col, lowercase=True).alias("ltoks"),
         _lines(t).alias("lines"),
     )
 
@@ -721,7 +697,8 @@ def _exploded_tokens(df: DataFrame, text_col: str, id_col: str | None,
     from .util import fan_out
 
     cols = ([F.col(id_col)] if id_col else []) + [
-        F.explode(_tokens_expr(text_col, lowercase)).alias("token")
+        F.explode(render(_tokens, text_col, lowercase=lowercase))
+        .alias("token")
     ]
     # key the fan-out exchange by the doc id when one is carried
     # (r15, guide §2.4): the (id, token) tf aggregation AND the
@@ -778,7 +755,7 @@ def doc_frequencies(df: DataFrame, text_col: str = "text",
     per_doc = fan_out(df).select(
         F.col(id_col),
         F.explode(F.array_distinct(
-            _tokens_expr(text_col, lowercase))).alias("token"),
+            render(_tokens, text_col, lowercase=lowercase))).alias("token"),
     )
     return per_doc.groupBy("token").agg(
         F.count(F.lit(1)).alias("df")

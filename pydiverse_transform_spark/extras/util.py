@@ -2,14 +2,14 @@
 
 from __future__ import annotations
 
+import inspect
 import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["fan_out", "plan_size_bytes", "SMALL_CORPUS_BYTES",
-           "UNKNOWN_PLAN_SIZE", "lit_num_array",
-           "sql_regex_mirrors_usable"]
+           "UNKNOWN_PLAN_SIZE", "lit_num_array", "render", "WS_CLASS"]
 
 # sentinel plan_size_bytes returns when Catalyst has no sizeInBytes
 # statistic for the plan (RDD-backed createDataFrame inputs, plans
@@ -122,7 +122,7 @@ def _num_token(v, is_int: bool) -> str:
     return repr(f)
 
 
-def lit_num_array(values, eltype: str = "double") -> Column:
+def lit_num_array(values, eltype: str = "double", f=F) -> Column:
     """Literal numeric array with O(1) plan-CONSTRUCTION cost (r14,
     guide §1.2 "per-task work" applied to the DRIVER).
 
@@ -140,54 +140,29 @@ def lit_num_array(values, eltype: str = "double") -> Column:
 
     ``eltype`` is the Spark element type name (``double``, ``float``,
     ``bigint``, ``int``...).  Empty input returns a typed empty array.
+    ``f`` is the functions surface (see :func:`render`).
     """
     vals = list(values)
     is_int = eltype in ("tinyint", "smallint", "int", "bigint", "long")
     if not vals:
-        return F.array().cast(f"array<{eltype}>")
+        return f.array().cast(f"array<{eltype}>")
     csv = ",".join(_num_token(v, is_int) for v in vals)
-    return F.split(F.lit(csv), ",").cast(f"array<{eltype}>")
+    return f.split(f.lit(csv), ",").cast(f"array<{eltype}>")
 
 
-def lit_num_array_sql(values, eltype: str = "double") -> str:
-    """SQL text of :func:`lit_num_array` — same split+cast form, same
-    constant folding; for expressions built as ONE ``F.expr`` string
-    (r14: Column-by-Column construction costs one py4j round-trip per
-    node; a parsed string costs three total)."""
-    vals = list(values)
-    is_int = eltype in ("tinyint", "smallint", "int", "bigint", "long")
-    if not vals:
-        return f"cast(array() as array<{eltype}>)"
-    csv = ",".join(_num_token(v, is_int) for v in vals)
-    return f"cast(split('{csv}', ',') as array<{eltype}>)"
+# Java regex's ``\s`` (no UNICODE_CHARACTER_CLASS) spelled as the raw
+# characters: a pattern built from it carries no backslash, so it reads
+# the same in a Column literal and in SQL text under either setting of
+# ``spark.sql.parser.escapedStringLiterals``.
+WS_CLASS = "[ \t\n\x0b\f\r]"
 
 
-def sql_regex_mirrors_usable() -> bool:
-    """True when the one-parse SQL-text expression mirrors that embed
-    regex escape sequences (``'\\\\s+'`` in the SQL text) parse to the
-    same pattern strings as their Column builders (r15, ADVICE r14).
-
-    The mirrors assume the default
-    ``spark.sql.parser.escapedStringLiterals=false`` (the parser
-    processes the escape, so ``'\\\\s+'`` reaches the regex engine as
-    ``\\s+``).  A session running with the LEGACY flag set keeps the
-    backslash doubled and would tokenize/shingle differently from the
-    config-immune Column path — callers must fall back to the Column
-    builders there.  One ``conf.get`` py4j call per build; not cached
-    because the conf is runtime-settable."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return True
-    try:
-        return (spark.conf.get("spark.sql.parser.escapedStringLiterals",
-                               "false").lower() != "true")
-    except Exception:
-        return True
+def ws_trim(f, text):
+    """``text`` with leading and trailing whitespace removed."""
+    return f.regexp_replace(text, f"^{WS_CLASS}+|{WS_CLASS}+$", "")
 
 
-def bind(col: Column, body) -> Column:
+def bind(col: Column, body, f=F) -> Column:
     """Let-expression for array/struct pipelines: evaluate ``col`` ONCE
     and hand the bound value to ``body`` (transform over a
     single-element struct array — the lambda variable holds the
@@ -200,11 +175,155 @@ def bind(col: Column, body) -> Column:
     regexp work per doc (measured 27 s vs ~1 s per pass on the bigram
     LM path at 5k docs).  Column references are cheap to capture;
     computed trees are not — bind them."""
-    return F.element_at(
-        F.transform(F.array(F.struct(col.alias("v"))),
+    return f.element_at(
+        f.transform(f.array(f.struct(col.alias("v"))),
                     lambda s: body(s["v"])),
         1,
     )
+
+
+# ---------------------------------------------------------------------------
+# One definition per expression.  An expression spec is a function
+# ``spec(f, x, *args)`` written against the ``pyspark.sql.functions``
+# surface.  :func:`render` calls it with ``f = F`` for a Column argument,
+# and with a SQL-text shim for a column NAME, parsing the resulting text
+# with ONE ``F.expr``: Column-by-Column construction costs one py4j
+# round-trip per node (~600 for a literal-centroid argmin, ~1.4k for a
+# minhash fold), a parsed string costs three in total.
+#
+# The shim renders ``name(args...)`` generically, the operators
+# ``+ - * % ==``, ``.cast``/``.alias``/``[field]``, ``when/otherwise``,
+# literals, and ``transform``/``aggregate``/``zip_with`` lambdas.  Python
+# strings passed straight to a function are SQL string literals, exactly
+# as ``F.regexp_replace``/``F.split``/``F.array_join`` read them; specs
+# wrap any other string constant in ``f.lit``.
+# ---------------------------------------------------------------------------
+
+def _sql_ident(name: str) -> str:
+    # dots mean nested access, exactly as in F.col(name)
+    return ".".join("`" + p.replace("`", "``") + "`"
+                    for p in name.split("."))
+
+
+def _sql_text(v) -> str:
+    if isinstance(v, _Sql):
+        return v.text
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        # D suffix: a bare 0.5 parses as DECIMAL, F.lit(0.5) is DOUBLE
+        return f"{v!r}D"
+    if isinstance(v, str):
+        # the text must parse the same under both escapedStringLiterals
+        # settings — a literal that needs an escape cannot
+        if "\\" in v or "'" in v:
+            raise ValueError(f"string literal needs escaping: {v!r}")
+        return f"'{v}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+class _Sql:
+    """SQL text of one expression, with the Column methods specs use."""
+
+    __slots__ = ("text",)
+    __hash__ = None
+
+    def __init__(self, text: str):
+        self.text = text
+
+    def _op(self, op: str, other) -> _Sql:
+        return _Sql(f"({self.text} {op} {_sql_text(other)})")
+
+    def __add__(self, o): return self._op("+", o)
+    def __sub__(self, o): return self._op("-", o)
+    def __mul__(self, o): return self._op("*", o)
+    def __mod__(self, o): return self._op("%", o)
+    def __eq__(self, o): return self._op("=", o)
+
+    def cast(self, dtype: str) -> _Sql:
+        return _Sql(f"cast({self.text} as {dtype})")
+
+    def alias(self, name: str) -> _Sql:
+        return _Sql(f"{self.text} AS `{name}`")
+
+    def __getitem__(self, field: str) -> _Sql:
+        return _Sql(f"{self.text}.`{field}`")
+
+
+class _SqlWhen:
+    def __init__(self, cond, value):
+        self.cond, self.value = cond, value
+
+    def otherwise(self, other) -> _Sql:
+        return _Sql(f"CASE WHEN {_sql_text(self.cond)} THEN "
+                    f"{_sql_text(self.value)} ELSE {_sql_text(other)} END")
+
+
+class _SqlFunctions:
+    """The ``pyspark.sql.functions`` surface, rendering SQL text.
+
+    Lambda variables are named ``lv0, lv1, ...``, skipping any name the
+    input columns use: a lambda variable shadows a same-named column
+    reference inside its body (case-insensitively), so a vector column
+    named like the variable would otherwise silently read the lambda
+    argument instead."""
+
+    def __init__(self, *columns: str):
+        self._taken = {c.split(".")[0].lower() for c in columns}
+        self._n = 0
+
+    def __getattr__(self, name: str):
+        if name.startswith("_"):
+            raise AttributeError(name)
+        return lambda *args: _Sql(
+            f"{name}({', '.join(map(_sql_text, args))})")
+
+    @staticmethod
+    def lit(v) -> _Sql:
+        return _Sql(_sql_text(v))
+
+    @staticmethod
+    def when(cond, value) -> _SqlWhen:
+        return _SqlWhen(cond, value)
+
+    def transform(self, arr, fn) -> _Sql:
+        return self._hof("transform", fn, arr)
+
+    def zip_with(self, left, right, fn) -> _Sql:
+        return self._hof("zip_with", fn, left, right)
+
+    def aggregate(self, arr, init, merge) -> _Sql:
+        return self._hof("aggregate", merge, arr, init)
+
+    def _hof(self, name: str, fn, *args) -> _Sql:
+        params = [self._fresh()
+                  for _ in inspect.signature(fn).parameters]
+        body = _sql_text(fn(*map(_Sql, params)))
+        head = params[0] if len(params) == 1 else f"({', '.join(params)})"
+        return _Sql(f"{name}({', '.join(map(_sql_text, args))}, "
+                    f"{head} -> {body})")
+
+    def _fresh(self) -> str:
+        while True:
+            name = f"lv{self._n}"
+            self._n += 1
+            if name not in self._taken:
+                return name
+
+
+def render(spec, x: Column | str, *args, **kw) -> Column:
+    """Build ``spec(f, x, *args, **kw)``: a Column argument builds the
+    Column tree with ``f = F``; a column NAME renders the same spec as
+    SQL text over that column and parses it with ONE ``F.expr``.  The
+    text holds no escape sequence, so it parses identically whatever
+    the session's string-literal mode."""
+    if isinstance(x, str):
+        text = _sql_text(spec(_SqlFunctions(x), _Sql(_sql_ident(x)),
+                              *args, **kw))
+        return F.expr(text)
+    return spec(F, x, *args, **kw)
 
 
 def fs_write_json(spark, path: str, obj: dict) -> None:

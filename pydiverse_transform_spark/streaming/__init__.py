@@ -324,6 +324,8 @@ def span_cut_stream(docs: DataFrame, dup_hashes: DataFrame,
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
+    from ..extras.util import WS_CLASS
+
     hashes = {r[hash_col] for r in
               dup_hashes.select(hash_col).distinct().collect()}
     bc = docs.sparkSession.sparkContext.broadcast(hashes)
@@ -340,10 +342,10 @@ def span_cut_stream(docs: DataFrame, dup_hashes: DataFrame,
         import pandas as pd
 
         # mirror extras.text.tokens EXACTLY: Java's \s is ASCII-only
-        # ([ \t\n\x0B\f\r]) while Python's str.split()/re \s are
+        # (WS_CLASS) while Python's str.split()/re \s are
         # Unicode-aware — a NBSP-containing doc must hash the same
         # windows here as in the batch op that learned dup_hashes
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
+        ws = re.compile(WS_CLASS + "+")
         hs = bc.value
         for pdf in batches:
             clean, nb, na = [], [], []

@@ -102,11 +102,21 @@ def _inner(sf_dir: str, cpus: int) -> None:
     spark.stop()
 
 
+def _usage(msg: str) -> None:
+    print(f"usage: {msg}", file=sys.stderr)
+    sys.exit(2)
+
+
 def main():
-    if len(sys.argv) > 2 and sys.argv[1] == "--inner":
-        _inner(sys.argv[2], int(sys.argv[3]))
+    args = sys.argv[1:]
+    if args[:1] == ["--inner"]:
+        if len(args) != 3 or not args[2].isdigit():
+            _usage("bench_sf_spot.py --inner <sf_dir> <cpus>")
+        _inner(args[1], int(args[2]))
         return
-    out_path = sys.argv[1] if len(sys.argv) > 1 else None
+    if len(args) > 1 or (args and args[0].startswith("-")):
+        _usage("bench_sf_spot.py [out.json]")
+    out_path = args[0] if args else None
     cells = {}
     first = True
     for sf_name, sf_dir in SFS:

@@ -104,3 +104,38 @@ def test_lm_empty_docs_absent(spark):
     ids = {r["doc_id"] for r in cl.lm_score(ref, grams, ctx).collect()}
     # "solo" gets the <s> sentinel bigram; empty/NULL docs vanish
     assert ids == {1, 4}
+
+
+def test_gram_cache_kept_when_plan_probe_raises(spark):
+    """An unanswerable sameResult probe (no plan access, e.g. Spark
+    Connect) must keep the previous gram cache: a same-plan retrain
+    shares its CacheManager entry."""
+    import uuid
+
+    class _NoPlan:
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def queryExecution(self):
+            raise RuntimeError("plan not accessible")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    def cached(df):
+        lv = df.storageLevel
+        return lv.useMemory or lv.useDisk
+
+    salt = uuid.uuid4().hex[:8]
+    docs = spark.createDataFrame(
+        [(i, f"{salt} w{i % 5} x{i % 3}") for i in range(30)],
+        "doc_id long, text string")
+    g1, c1 = cl.bigram_lm_train(docs)
+    cl.lm_score(docs, g1, c1).count()
+    assert cached(g1)
+    g1._jdf = _NoPlan(g1._jdf)
+    g2, _ = cl.bigram_lm_train(docs)
+    try:
+        assert cached(g2), "gram cache dropped on a failed plan probe"
+    finally:
+        cl._lm_release_gram_cache(g2)

@@ -1,7 +1,7 @@
 """r15 optimization internals: the bounded CC sizing probe, the
 gated _cc_driver broadcast hint, the gram-cache registry/scoped
-release, the one-parse tokens mirror and its legacy-escaping fallback,
-and the per-file schema-cache fingerprint.
+release, and the per-file schema-cache fingerprint (the tokens
+Column/name-form equivalence lives in tests/test_expr_specs.py).
 
 These pin BEHAVIOR EQUIVALENCE of the optimized internals — the bench
 queries themselves stay oracle-checked elsewhere."""
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from pydiverse_transform_spark.extras import classify as cl
 from pydiverse_transform_spark.extras import dedup as dd
 from pydiverse_transform_spark.extras.dedup import connected_components
-from pydiverse_transform_spark.extras.text import _tokens_expr, tokens
 
 
 def _persistent_rdd_ids(spark):
@@ -20,75 +19,6 @@ def _persistent_rdd_ids(spark):
     while it.hasNext():
         ids.add(it.next())
     return ids
-
-
-ADVERSARIAL_DOCS = [
-    (1, "  Hello  WORLD  "), (2, ""), (3, None), (4, " \t\n  "),
-    (5, "a"), (6, "x y\tz\nq  r"), (7, "ümlaut ÉLAN  Mixed"),
-    (8, "back\\slash 'quote' \"dq\""), (9, "..."), (10, "a  b"),
-]
-
-
-def _docs(spark):
-    return spark.createDataFrame(ADVERSARIAL_DOCS,
-                                 "doc_id long, text string")
-
-
-def test_tokens_sql_mirror_matches_column_form(spark):
-    """tokens(str) / _tokens_expr must be value-identical to the
-    Column builder, lowercased and not, on adversarial inputs."""
-    rows = _docs(spark).select(
-        tokens(F.col("text")).alias("c"),
-        tokens("text").alias("s"),
-        _tokens_expr("text", lowercase=True).alias("sl"),
-        tokens(F.lower(F.col("text"))).alias("cl"),
-    ).collect()
-    for r in rows:
-        assert r.c == r.s
-        assert r.cl == r.sl
-
-
-def test_tokens_mirror_is_one_parse(spark):
-    """The str form must not expand into per-node Column construction:
-    its analyzed plan equals the Column form's (same expression), and
-    the parsed expression round-trips values."""
-    a = _docs(spark).select(tokens("text").alias("t"))
-    b = _docs(spark).select(tokens(F.col("text")).alias("t"))
-    assert [r.t for r in a.collect()] == [r.t for r in b.collect()]
-
-
-def test_sql_mirrors_fall_back_under_legacy_escaping(spark):
-    """With spark.sql.parser.escapedStringLiterals=true the SQL-text
-    mirrors would parse their regex escapes differently — the str
-    dispatch must fall back to the Column builders and keep values
-    identical (ADVICE r14)."""
-    df = _docs(spark)
-    cols = dict(
-        toks=tokens("text"),
-        ws=dd.word_shingles("text", 2),
-        cs=dd.char_shingles("text", 3),
-    )
-    from pydiverse_transform_spark.extras.importance import (
-        hashed_ngram_buckets,
-    )
-
-    cols["hb"] = hashed_ngram_buckets("text", 64)
-    want = df.select(*[v.alias(k) for k, v in cols.items()]).collect()
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        got = df.select(
-            tokens("text").alias("toks"),
-            dd.word_shingles("text", 2).alias("ws"),
-            dd.char_shingles("text", 3).alias("cs"),
-            hashed_ngram_buckets("text", 64).alias("hb"),
-        ).collect()
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-    for w, g in zip(want, got):
-        assert w.toks == g.toks
-        assert sorted(w.ws) == sorted(g.ws)
-        assert sorted(w.cs) == sorted(g.cs)
-        assert w.hb == g.hb
 
 
 def test_cc_probe_persists_only_the_limited_relation(spark, monkeypatch):

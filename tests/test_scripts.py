@@ -1,0 +1,26 @@
+"""Command-line contracts of the measurement scripts (no Spark)."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+SPOT = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts", "bench_sf_spot.py")
+
+
+@pytest.mark.parametrize("args", [
+    ["--inner"], ["--inner", "/no/such/sf"], ["--inner", "/x", "4", "5"],
+    ["--inner", "/x", "four"], ["out.json", "extra"], ["--bogus"],
+])
+def test_bench_sf_spot_rejects_bad_argv(args):
+    """A malformed command line is a usage error (exit 2), never a
+    traceback and never a run with a flag taken as the output path."""
+    proc = subprocess.run([sys.executable, SPOT, *args],
+                          capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 2
+    assert proc.stderr.startswith("usage: ")
+    assert "Traceback" not in proc.stderr
