@@ -57,6 +57,73 @@ def test_lit_num_array_constant_folds(spark):
     assert "split(" not in opt.lower()
 
 
+def test_sql_text_mirrors_match_column_forms(spark):
+    """The one-SQL-parse name forms (shingles, base hash, signature
+    fold, hashed n-gram buckets, importance weight, kmeans/ivf cell)
+    must be value-identical to the Column-built forms on adversarial
+    inputs (nulls, empties, whitespace runs, backslashes, quotes,
+    unicode)."""
+    from pyspark.sql import functions as F
+
+    from pydiverse_transform_spark.extras import similarity as sim
+    from pydiverse_transform_spark.extras.dedup import (
+        char_shingles,
+        minhash_signature_array,
+        shingle_base_hash,
+        word_shingles,
+    )
+
+    texts = [None, "", "   ", "a", "a b", "  a\t\tb\nc  ", "a'b\\c",
+             "x " * 40, "ünïcode  wörds hére", "tab\tsep\ttoks",
+             'quo"te `tick` $dollar', "\\s+ literal backslash s plus"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "id long, text string")
+    for k in (1, 3):
+        a = df.select("id", word_shingles(F.col("text"), k).alias("v"))
+        b = df.select("id", word_shingles("text", k).alias("v"))
+        assert (a.collect() == b.collect())
+    for k in (2, 5):
+        a = df.select("id", char_shingles(F.col("text"), k).alias("v"))
+        b = df.select("id", char_shingles("text", k).alias("v"))
+        assert (a.collect() == b.collect())
+    sh = df.select("id", word_shingles("text", 3).alias("sh"))
+    a = sh.select("id", shingle_base_hash(F.col("sh")).alias("v"))
+    b = sh.select("id", shingle_base_hash("sh").alias("v"))
+    assert a.collect() == b.collect()
+    bh = sh.select("id", shingle_base_hash("sh").alias("bh"))
+    a = bh.select("id", minhash_signature_array(F.col("bh"), 16).alias("v"))
+    b = bh.select("id", minhash_signature_array("bh", 16).alias("v"))
+    assert a.collect() == b.collect()
+
+    from pydiverse_transform_spark.extras.importance import (
+        hashed_ngram_buckets,
+        importance_weight,
+    )
+
+    for bg in (True, False):
+        a = df.select(
+            "id", hashed_ngram_buckets(F.col("text"), 64, bg).alias("v"))
+        b = df.select(
+            "id", hashed_ngram_buckets("text", 64, bg).alias("v"))
+        assert a.collect() == b.collect()
+    lut = [0.25 * i - 3.0 for i in range(64)]
+    a = df.select("id", importance_weight(F.col("text"), lut).alias("v"))
+    b = df.select("id", importance_weight("text", lut).alias("v"))
+    assert a.collect() == b.collect()
+
+    vecs = [(0, None), (1, [0.5] * 8), (2, [float("nan")] * 8),
+            (3, [1.0, -1.0, 0.0, 2.5, -3.5, 4.0, 0.25, -0.125]),
+            (4, [1.0] * 5)]
+    vdf = spark.createDataFrame(vecs, "id long, v array<double>")
+    cents = sim.hyperplanes(8, 6, seed="r14ab")
+    a = vdf.select("id", sim.kmeans_cell(F.col("v"), cents).alias("c"))
+    b = vdf.select("id", sim.kmeans_cell("v", cents).alias("c"))
+    assert a.collect() == b.collect()
+    a = vdf.select("id", sim.ivf_cell(F.col("v"), cents).alias("c"))
+    b = vdf.select("id", sim.ivf_cell("v", cents).alias("c"))
+    assert a.collect() == b.collect()
+
+
 def _persistent_rdd_ids(spark):
     it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
     ids = set()

@@ -1,7 +1,7 @@
 """r15 optimization internals: the bounded CC sizing probe, the
 gated _cc_driver broadcast hint, the gram-cache registry/scoped
-release, and the per-file schema-cache fingerprint (the tokens
-Column/name-form equivalence lives in tests/test_expr_specs.py).
+release, the tokens name form, and the per-file schema-cache
+fingerprint.
 
 These pin BEHAVIOR EQUIVALENCE of the optimized internals — the bench
 queries themselves stay oracle-checked elsewhere."""
@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from pydiverse_transform_spark.extras import classify as cl
 from pydiverse_transform_spark.extras import dedup as dd
 from pydiverse_transform_spark.extras.dedup import connected_components
+from pydiverse_transform_spark.extras.text import _tokens, tokens
+from pydiverse_transform_spark.extras.util import render
 
 
 def _persistent_rdd_ids(spark):
@@ -19,6 +21,32 @@ def _persistent_rdd_ids(spark):
     while it.hasNext():
         ids.add(it.next())
     return ids
+
+
+ADVERSARIAL_DOCS = [
+    (1, "  Hello  WORLD  "), (2, ""), (3, None), (4, " \t\n  "),
+    (5, "a"), (6, "x y\tz\nq  r"), (7, "ümlaut ÉLAN  Mixed"),
+    (8, "back\\slash 'quote' \"dq\""), (9, "..."), (10, "a  b"),
+]
+
+
+def _docs(spark):
+    return spark.createDataFrame(ADVERSARIAL_DOCS,
+                                 "doc_id long, text string")
+
+
+def test_tokens_sql_mirror_matches_column_form(spark):
+    """tokens(str) and the lowercased name form of the tokens spec must
+    be value-identical to the Column builder on adversarial inputs."""
+    rows = _docs(spark).select(
+        tokens(F.col("text")).alias("c"),
+        tokens("text").alias("s"),
+        render(_tokens, "text", lowercase=True).alias("sl"),
+        tokens(F.lower(F.col("text"))).alias("cl"),
+    ).collect()
+    for r in rows:
+        assert r.c == r.s
+        assert r.cl == r.sl
 
 
 def test_cc_probe_persists_only_the_limited_relation(spark, monkeypatch):
