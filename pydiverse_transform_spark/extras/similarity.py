@@ -547,14 +547,10 @@ def kmeans_spread_seeds(df: DataFrame, k: int,
     ck = min(coarse_k or int(np.ceil(np.sqrt(k))), k, len(X))
     coarse = X[_farthest_first(np, X, norms, ck)]
     # nearest coarse seed per pool vector: argmax x·c - ||c||²/2 with
-    # first-max-wins ties (same contract as the assignment kernel);
-    # chunk rows to bound the transient scores block
+    # first-max-wins ties (same contract as the assignment kernel)
     half = 0.5 * (coarse * coarse).sum(axis=1)
-    lab = np.empty(len(X), dtype=np.int64)
-    chunk = max(1, (64 << 20) // max(ck, 1))
-    for s0 in range(0, len(X), chunk):
-        xe = X[s0:s0 + chunk]
-        lab[s0:s0 + len(xe)] = np.argmax(xe @ coarse.T - half, axis=1)
+    lab = np.concatenate(_row_chunked(ck)(
+        lambda xe: np.argmax(xe @ coarse.T - half, axis=1), X))
     counts = np.bincount(lab, minlength=ck)
     raw = k * counts / float(len(X))
     quota = np.minimum(np.floor(raw).astype(np.int64), counts)
@@ -639,46 +635,65 @@ def _centroid_matrix(centroids):
     return cids, mat
 
 
-def _assign_cells_numpy(df: DataFrame, centroids, vec_col: str,
-                        out_col: str) -> DataFrame:
-    """Map-only large-k cell assignment: the centroid matrix rides an
-    executor broadcast (NOT the plan), distances are one BLAS matmul
-    per Arrow batch.  Plan size is flat in k; per-row work is k x dim
-    FLOPs in vectorized numpy instead of an interpreted Catalyst fold —
-    the path that stays viable at SemDeDup's published ~110k clusters
-    where a plan-literal argmin would be a ~50 MB plan and an
-    interpreted 100k-iteration loop per row."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+# Plan-literal argmin up to this many centroids (assign_cells,
+# ivfpq_encode) or codes per subspace (pq_encode, pq_fit); above it the
+# broadcast-matrix kernel (:func:`_nearest_map`), whose plan is flat in
+# k.  Evidence per lane: docs/SCALE_KNOBS.md, LANES.
+_LITERAL_MAX_K = 256
 
-    cids, mat = _centroid_matrix(centroids)
-    # argmin ||x-c||^2 == argmax (x . c - ||c||^2 / 2); precompute the
-    # half-norms once.  Ties go to the LOWEST cid (np.argmax returns the
-    # first maximal index and cids are sorted) — same contract as the
-    # literal argmin.
+
+def _row_chunked(k: int):
+    """``chunked(f, x)``: the per-chunk math ``f`` applied to row chunks
+    of ``x``, one result per chunk.  A chunk's rows x ``k`` float64
+    score block stays at ~128 MB: at SemDeDup-scale k (~110k cells) a
+    whole 10k-row Arrow batch would be an 8.8 GB block.  Returned as a
+    closure so executor kernels carry it by value and never import
+    this module."""
+    step = max(1, (16 << 20) // max(k, 1))
+
+    def chunked(f, x):
+        return [f(x[s:s + step]) for s in range(0, len(x), step)]
+
+    return chunked
+
+
+def _nearest_map(df: DataFrame, vec_col: str, out_field, mat, cids,
+                 math, invalid=None) -> DataFrame:
+    """The broadcast-matrix nearest-centroid kernel behind
+    assign_cells' numpy lane, :func:`assign_cells_multi` and
+    pq_encode's numpy lane.  ``mat`` is k x dim centroids (or m
+    subspaces x k x dsub codebooks); it rides one executor broadcast
+    with its half-norms ``||c||²/2`` and ``cids`` — NOT the plan, so
+    the plan is flat in k.  Per Arrow batch, the valid vectors (non-null,
+    length dim) stack into one float64 matrix, and
+    ``math(rows, cids, mat, half)`` maps each ~128 MB row chunk
+    (:func:`_row_chunked`) to a list of per-row output values: one BLAS
+    matmul per chunk instead of an interpreted Catalyst fold per row.
+    Invalid rows get ``invalid`` — the literal lanes' contract, whose
+    zip_with pads a wrong-length vector with nulls and null-propagates.
+    ``out_field`` is appended to the input schema."""
+    from pyspark.sql.types import IntegerType, StructType
+
+    k = mat.shape[-2]
+    dim = mat.size // k
     bc = df.sparkSession.sparkContext.broadcast(
-        (cids, mat, 0.5 * (mat * mat).sum(axis=1)))
+        (cids, mat, 0.5 * (mat * mat).sum(axis=-1)))
     # StructType.add mutates in place — build a fresh schema
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, IntegerType())])
+    schema = StructType(list(df.schema.fields) + [out_field])
+    out_col = out_field.name
+    scalar = isinstance(out_field.dataType, IntegerType)
+    chunked = _row_chunked(k)
 
     def kernel(batches):
+        from itertools import chain
+
         import numpy as np
         import pandas as pd
 
-        cids_, mat_, half = bc.value
-        k, dim = mat_.shape
-        # Bound the transient scores matrix (rows x k float64) to
-        # ~128 MB per worker: at SemDeDup-scale k (~110k cells) a full
-        # 10k-row Arrow batch would otherwise materialize an 8.8 GB
-        # scores block per worker.  Chunk rows, keep the matmul shape
-        # BLAS-friendly.
-        chunk = max(1, (16 << 20) // max(k, 1))
+        model = bc.value
         for pdf in batches:
             vs = pdf[vec_col]
-            out = pd.array([None] * len(vs), dtype="Int32")
-            # wrong-length vectors (incl. empty) get a null cell, the
-            # same contract as the literal path, whose zip_with pads
-            # with nulls and null-propagates
+            out = [invalid] * len(vs)
             valid = [i for i, v in enumerate(vs)
                      if v is not None and len(v) == dim]
             if valid:
@@ -691,68 +706,41 @@ def _assign_cells_numpy(df: DataFrame, centroids, vec_col: str,
                     x = np.asarray(
                         [np.asarray(vs.iloc[i], dtype=np.float64)
                          for i in valid])
-                lab = np.empty(len(valid), dtype=np.int64)
-                for s in range(0, x.shape[0], chunk):
-                    xe = x[s:s + chunk]
-                    lab[s:s + len(xe)] = cids_[
-                        np.argmax(xe @ mat_.T - half, axis=1)]
-                for j, i in enumerate(valid):
-                    out[i] = int(lab[j])
+                vals = chain.from_iterable(
+                    chunked(lambda xe: math(xe, *model), x))
+                for i, v in zip(valid, vals):
+                    out[i] = v
             pdf = pdf.copy()
-            pdf[out_col] = out
+            pdf[out_col] = pd.array(out, dtype="Int32") if scalar else out
             yield pdf
 
     return df.mapInPandas(kernel, schema)
 
 
-def _assign_cells_join(df: DataFrame, centroids: DataFrame, vec_col: str,
-                       id_col: str, out_col: str) -> DataFrame:
-    """Broadcast min-by join assignment (the :func:`kmeans_assign`
-    shape, generalized to carry every input column through): k centroid
-    rows broadcast, squared-L2 in codegen, argmin via a map-side-
-    combinable min(struct) re-grouped on ``id_col``.  Pays ONE shuffle
-    of the projection; distances never leave the JVM.
+def _assign_cells_numpy(df: DataFrame, centroids, vec_col: str,
+                        out_col: str) -> DataFrame:
+    """Map-only large-k cell assignment on :func:`_nearest_map` — the
+    path that stays viable at SemDeDup's published ~110k clusters where
+    a plan-literal argmin would be a ~50 MB plan and an interpreted
+    100k-iteration loop per row."""
+    from pyspark.sql.types import IntegerType, StructField
+    import numpy as np
 
-    Contract alignment with the numpy/literal strategies: rows with a
-    NULL ``vec_col`` bypass the join and keep a NULL ``out_col`` (a
-    null distance in every struct would otherwise make ``min`` resolve
-    purely by ``__cid`` and assign the lowest cell), and rows whose
-    winning distance is NULL (dimension-mismatched vectors, null
-    components) also get a NULL cell — same null-propagation as the
-    literal path.  ``id_col`` MUST be unique — the argmin is a groupBy
-    on it, so duplicate ids would collapse to one row; the other
-    strategies are row-preserving."""
-    cens = F.broadcast(centroids.select("cid", "centroid"))
-    others = [c for c in df.columns if c != id_col]
-    nulls = df.filter(F.col(vec_col).isNull()).select(
-        F.col(id_col), *[F.col(c) for c in others],
-        F.lit(None).cast("int").alias(out_col),
-    )
-    scored = df.filter(F.col(vec_col).isNotNull()).crossJoin(cens).select(
-        F.col(id_col),
-        F.struct(
-            _sq_l2(F.col(vec_col), F.col("centroid")).alias("__d2"),
-            F.col("cid").alias("__cid"),
-            *[F.col(c) for c in others],
-        ).alias("__s"),
-    )
-    assigned = (
-        scored.groupBy(id_col)
-        .agg(F.min("__s").alias("__s"))
-        .select(
-            F.col(id_col),
-            *[F.col(f"__s.{c}").alias(c) for c in others],
-            F.when(F.col("__s.__d2").isNotNull(),
-                   F.col("__s.__cid")).cast("int").alias(out_col),
-        )
-    )
-    return assigned.unionByName(nulls)
+    cids, mat = _centroid_matrix(centroids)
+
+    # argmin ||x-c||^2 == argmax (x . c - ||c||^2 / 2).  Ties go to the
+    # LOWEST cid (np.argmax returns the first maximal index and cids are
+    # sorted) — same contract as the literal argmin.
+    def nearest(x, cids_, mat_, half):
+        return cids_[np.argmax(x @ mat_.T - half, axis=1)].tolist()
+
+    return _nearest_map(df, vec_col, StructField(out_col, IntegerType()),
+                        mat, cids, nearest)
 
 
 def assign_cells(df: DataFrame, centroids, vec_col: str = "embedding",
-                 out_col: str = "__cell", id_col: str | None = None,
-                 method: str = "auto",
-                 max_literal_k: int = 256) -> DataFrame:
+                 out_col: str = "__cell",
+                 method: str = "auto") -> DataFrame:
     """Add a quantizer-cell column, choosing the physical strategy by
     model size.  ``centroids`` is either a ``list[list[float]]`` or a
     (cid, centroid) DataFrame (what :func:`kmeans_fit` /
@@ -761,64 +749,59 @@ def assign_cells(df: DataFrame, centroids, vec_col: str = "embedding",
 
     - ``literal`` — :func:`kmeans_cell` codegen argmin.  Plan size and
       per-row interpreted-fold cost grow with k x dim; right for small
-      k (<= ``max_literal_k``), wrong at SemDeDup's ~110k clusters.
-    - ``numpy`` — Arrow-batched ``pandas_udf``; centroid matrix on an
+      k (<= 256), wrong at SemDeDup's ~110k clusters.
+    - ``numpy`` — Arrow-batched ``mapInPandas``; centroid matrix on an
       executor BROADCAST, one BLAS matmul per batch.  Map-only (zero
       shuffle), plan size flat in k: the large-k / 100-TB path.
-    - ``join`` — broadcast min-by join (:func:`kmeans_assign` shape);
-      needs a UNIQUE ``id_col`` (the argmin re-groups on it); one
-      shuffle, distances in codegen.
-    - ``auto`` — literal when a plain list with k <= ``max_literal_k``,
-      else numpy.
+    - ``auto`` — literal when a plain list with k <= 256, else numpy.
 
     Tie contract everywhere: equal distance -> LOWEST cid.
 
-    Edge-input contract (fuzzed across strategies in
+    Edge-input contract (fuzzed across strategies, and against
+    :func:`assign_cells_multi`'s nearest cell, in
     ``tests/test_fuzz_assign.py``):
 
     - NULL vector, or vector whose length differs from the centroid
       dim (incl. empty) -> NULL cell, all strategies.
     - Any NaN component -> the LOWEST cid, all strategies (every
       distance is NaN; Catalyst's ``array_position(.., array_min)``
-      resolves the all-NaN tie to the first element, BLAS argmax
-      returns the first NaN, and Spark's min-struct treats NaN as
-      equal to NaN so the cid tiebreak fires — three different
-      mechanisms, one answer).
+      resolves the all-NaN tie to the first element and BLAS argmax
+      returns the first NaN — two different mechanisms, one answer).
     - NULL components (a non-null array containing nulls): NULL cell
-      on literal/join (null-propagating distance); the numpy path
-      CANNOT distinguish them — Arrow converts null elements to NaN —
-      so it follows the NaN contract (lowest cid).
+      on literal (null-propagating distance); the numpy path CANNOT
+      distinguish them — Arrow converts null elements to NaN — so it
+      follows the NaN contract (lowest cid).
     - ±Inf components and magnitudes beyond ~1e154: STRATEGY-
-      DEPENDENT.  literal/join compute ||x-c||², which overflows to
-      +Inf for every centroid and collapses to the lowest cid; numpy
+      DEPENDENT.  literal computes ||x-c||², which overflows to +Inf
+      for every centroid and collapses to the lowest cid; numpy
       computes x·c - ||c||²/2, which stays finite (or keeps ±Inf's
       sign) and resolves by direction.  Do not feed unscaled
       astronomical magnitudes to a k-means quantizer and expect
       strategy-identical cells.
     - Near-ties below formulation rounding error: STRATEGY-DEPENDENT.
-      literal/join evaluate Σ(x−c)² directly; its rounding error is
+      literal evaluates Σ(x−c)² directly; its rounding error is
       O(dim · ulp((max|x|+max|c|)²)) — roughly one ulp of ||x||².
       When the true winning margin between the two best cells is
-      smaller than that, the direct forms see an exact tie and
-      tie-break to the lowest cid, while the numpy path's
+      smaller than that, the direct form sees an exact tie and
+      tie-breaks to the lowest cid, while the numpy path's
       x·c − ||c||²/2 never squares the dominant components, keeps the
       margin, and returns the true argmin — the dot-trick is the MORE
       accurate formulation here, so the divergence is the direct
-      forms' rounding, not a numpy bug (r8 fuzz finding: margin 2e-5
+      form's rounding, not a numpy bug (r8 fuzz finding: margin 2e-5
       under ||x||²≈1e12, ulp≈2.4e-4).
 
     The guaranteed-agreement domain is therefore: finite vectors,
     |v| < ~1e150, AND winning margin above a few ulps of the largest
     squared term.  ``tests/test_fuzz_assign.py`` asserts exact
-    three-way agreement above that tolerance and membership in the
-    near-tied cell set below it."""
-    if method not in ("auto", "literal", "numpy", "join"):
-        raise ValueError(f"method must be auto|literal|numpy|join, "
+    agreement above that tolerance and membership in the near-tied
+    cell set below it."""
+    if method not in ("auto", "literal", "numpy"):
+        raise ValueError(f"method must be auto|literal|numpy, "
                          f"got {method!r}")
     if method == "auto":
         method = ("literal"
                   if not isinstance(centroids, DataFrame)
-                  and len(centroids) <= max_literal_k else "numpy")
+                  and len(centroids) <= _LITERAL_MAX_K else "numpy")
     if method == "literal":
         if isinstance(centroids, DataFrame):
             import numpy as np
@@ -832,12 +815,6 @@ def assign_cells(df: DataFrame, centroids, vec_col: str = "embedding",
             centroids = mat.tolist()
         # column-NAME form: one SQL parse per assignment (r14)
         return df.withColumn(out_col, kmeans_cell(vec_col, centroids))
-    if method == "join":
-        if id_col is None:
-            raise ValueError("method='join' requires id_col")
-        if not isinstance(centroids, DataFrame):
-            centroids = _centroids_as_df(df.sparkSession, centroids)
-        return _assign_cells_join(df, centroids, vec_col, id_col, out_col)
     return _assign_cells_numpy(df, centroids, vec_col, out_col)
 
 
@@ -866,8 +843,8 @@ def assign_cells_multi(df: DataFrame, centroids, n_probe: int = 2,
     d(y, c1x) + ||x-y|| <= d(x, c1x) + 2||x-y||``), so a margin of
     ``2 * max_pair_distance`` misses nothing n_probe-unbounded probing
     would have caught within n_probe cells."""
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, \
-        StructType
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
+    import numpy as np
 
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
@@ -876,70 +853,34 @@ def assign_cells_multi(df: DataFrame, centroids, n_probe: int = 2,
     cids, mat = _centroid_matrix(centroids)
     if n_probe > len(cids):
         raise ValueError(f"n_probe={n_probe} exceeds k={len(cids)}")
-    bc = df.sparkSession.sparkContext.broadcast(
-        (cids, mat, 0.5 * (mat * mat).sum(axis=1), n_probe,
-         probe_margin))
-    schema = StructType(list(df.schema.fields)
-                        + [StructField(out_col,
-                                       ArrayType(IntegerType()))])
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def probes(x, cids_, mat_, half):
+        scores = -(x @ mat_.T - half)  # ascending d2/2
+        # STABLE argsort: columns are in ascending-cid order (sorted in
+        # _centroid_matrix), so equal distances resolve to the lower
+        # cid everywhere — including at the selection boundary, where
+        # argpartition would pick arbitrarily among straddling ties and
+        # make the probe set nondeterministic.  O(k log k)/row vs O(k),
+        # but vectorized C either way; determinism wins.
+        o = np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
+        sel = cids_[o].tolist()
+        if probe_margin is None or n_probe == 1:
+            return sel
+        # true distances of the selected cells: d^2 = 2*score + ||x||^2
+        # (score = ||c||^2/2 - x.c), clamped against FP-negative zeros
+        xn2 = (x * x).sum(axis=1)[:, None]
+        dsel = np.sqrt(np.maximum(
+            2.0 * np.take_along_axis(scores, o, axis=1) + xn2, 0.0))
+        within = dsel <= dsel[:, :1] + probe_margin
+        # the nearest cell is always kept (guards the all-NaN-distance
+        # row, where <= is false everywhere and the prefix would be
+        # empty)
+        keep = np.maximum(within.sum(axis=1), 1).tolist()
+        return [r[:n] for r, n in zip(sel, keep)]
 
-        cids_, mat_, half, p, margin = bc.value
-        k, dim = mat_.shape
-        chunk = max(1, (16 << 20) // max(k, 1))  # scores <= ~128 MB
-        for pdf in batches:
-            vs = pdf[vec_col]
-            out = [None] * len(vs)
-            valid = [i for i, v in enumerate(vs)
-                     if v is not None and len(v) == dim]
-            if valid:
-                if len(valid) == len(vs):
-                    x = np.stack(vs.to_numpy()).astype(
-                        np.float64, copy=False)
-                else:
-                    x = np.asarray(
-                        [np.asarray(vs.iloc[i], dtype=np.float64)
-                         for i in valid])
-                order = np.empty((x.shape[0], p), dtype=np.int64)
-                keep_n = np.full(x.shape[0], p, dtype=np.int64)
-                for s in range(0, x.shape[0], chunk):
-                    xe = x[s:s + chunk]
-                    scores = -(xe @ mat_.T - half)  # ascending d2/2
-                    # STABLE argsort: columns are in ascending-cid
-                    # order (sorted in _centroid_matrix), so equal
-                    # distances resolve to the lower cid everywhere —
-                    # including at the selection boundary, where
-                    # argpartition would pick arbitrarily among
-                    # straddling ties and make the probe set
-                    # nondeterministic.  O(k log k)/row vs O(k), but
-                    # vectorized C either way; determinism wins.
-                    o = np.argsort(scores, axis=1, kind="stable")[:, :p]
-                    order[s:s + len(xe)] = o
-                    if margin is not None and p > 1:
-                        # true distances of the selected cells:
-                        # d^2 = 2*score + ||x||^2 (score = ||c||^2/2
-                        # - x.c), clamped against FP-negative zeros
-                        xn2 = (xe * xe).sum(axis=1)[:, None]
-                        dsel = np.sqrt(np.maximum(
-                            2.0 * np.take_along_axis(scores, o, axis=1)
-                            + xn2, 0.0))
-                        within = dsel <= dsel[:, :1] + margin
-                        # the nearest cell is always kept (guards the
-                        # all-NaN-distance row, where <= is false
-                        # everywhere and the prefix would be empty)
-                        keep_n[s:s + len(xe)] = np.maximum(
-                            within.sum(axis=1), 1)
-                for j, i in enumerate(valid):
-                    out[i] = [int(cids_[c])
-                              for c in order[j, :keep_n[j]]]
-            pdf = pdf.copy()
-            pdf[out_col] = out
-            yield pdf
-
-    return df.mapInPandas(kernel, schema)
+    return _nearest_map(df, vec_col,
+                        StructField(out_col, ArrayType(IntegerType())),
+                        mat, cids, probes)
 
 
 def _centroids_as_df(spark, centroids: list[list[float]]) -> DataFrame:
@@ -1040,7 +981,7 @@ def kmeans_fit(df: DataFrame, k: int, n_iter: int = 5,
     for _ in range(n_iter):
         assigned = assign_cells(
             base, centroids, vec_col=vec_col, out_col="cid",
-            id_col=id_col, method=assign_method,
+            method=assign_method,
         ).select(F.col(id_col), F.col("cid"), F.col(vec_col))
         ex = assigned.select(
             "cid", F.posexplode(F.col(vec_col)).alias("pos", "v")
@@ -1108,7 +1049,7 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
       broadcast as an (m, k, dsub) array, each subspace's argmin is a
       BLAS matmul per chunk.  Plan flat in m x k_codes.
     - ``auto`` — literal when k_codes <= 256 (the assign_cells
-      ``max_literal_k`` threshold), else numpy.
+      threshold), else numpy.
 
     Contract (both paths, fuzz-pinned in tests/test_pq.py): ties to
     the LOWEST code id; a null vector or one whose length differs from
@@ -1118,7 +1059,7 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
         raise ValueError(f"method must be auto|literal|numpy, "
                          f"got {method!r}")
     if method == "auto":
-        method = "literal" if k_codes <= 256 else "numpy"
+        method = "literal" if k_codes <= _LITERAL_MAX_K else "numpy"
     if method == "numpy":
         return _pq_encode_numpy(df, codebooks, vec_col, code_col)
     # the whole code expression is ONE SQL parse (r14): a
@@ -1151,62 +1092,25 @@ def _pq_code(f, vec, codebooks):
 
 def _pq_encode_numpy(df: DataFrame, codebooks, vec_col: str,
                      code_col: str) -> DataFrame:
-    """Large-codebook PQ encoding: one broadcast (m, k, dsub) model,
-    per-subspace argmin as a BLAS matmul over row chunks (scores
-    bounded to ~128 MB per worker, same discipline as
-    :func:`_assign_cells_numpy`)."""
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, \
-        StructType
+    """Large-codebook PQ encoding on :func:`_nearest_map`: the
+    (m, k, dsub) codebooks are one broadcast model, each subspace's
+    argmin one BLAS matmul per row chunk."""
+    from pyspark.sql.types import ArrayType, IntegerType, StructField
     import numpy as np
 
     cb = np.asarray(codebooks, dtype=np.float64)      # (m, k, dsub)
-    m, k, dsub = cb.shape
-    half = 0.5 * (cb * cb).sum(axis=2)                # (m, k)
-    bc = df.sparkSession.sparkContext.broadcast((cb, half))
-    schema = StructType(list(df.schema.fields)
-                        + [StructField(code_col,
-                                       ArrayType(IntegerType()))])
+    m, _, dsub = cb.shape
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def codes(x, _cids, cb_, half):
+        return np.stack([
+            np.argmax(x[:, j * dsub:(j + 1) * dsub] @ cb_[j].T - half[j],
+                      axis=1)
+            for j in range(m)], axis=1).tolist()
 
-        cb_, half_ = bc.value
-        m_, k_, dsub_ = cb_.shape
-        dim = m_ * dsub_
-        chunk = max(1, (16 << 20) // max(k_, 1))
-        for pdf in batches:
-            vs = pdf[vec_col]
-            out = [None] * len(vs)
-            valid = [i for i, v in enumerate(vs)
-                     if v is not None and len(v) == dim]
-            if valid:
-                if len(valid) == len(vs):
-                    x = np.stack(vs.to_numpy()).astype(
-                        np.float64, copy=False)
-                else:
-                    x = np.asarray(
-                        [np.asarray(vs.iloc[i], dtype=np.float64)
-                         for i in valid])
-                codes = np.empty((x.shape[0], m_), dtype=np.int64)
-                for s in range(0, x.shape[0], chunk):
-                    xe = x[s:s + chunk]
-                    for j in range(m_):
-                        xs = xe[:, j * dsub_:(j + 1) * dsub_]
-                        codes[s:s + len(xe), j] = np.argmax(
-                            xs @ cb_[j].T - half_[j], axis=1)
-                for r, i in enumerate(valid):
-                    out[i] = [int(c) for c in codes[r]]
-            # literal-path contract: invalid rows get m nulls, not a
-            # null array
-            for i in range(len(vs)):
-                if out[i] is None:
-                    out[i] = [None] * m_
-            pdf = pdf.copy()
-            pdf[code_col] = out
-            yield pdf
-
-    return df.mapInPandas(kernel, schema)
+    # literal-path contract: invalid rows get m nulls, not a null array
+    return _nearest_map(df, vec_col,
+                        StructField(code_col, ArrayType(IntegerType())),
+                        cb, None, codes, invalid=[None] * m)
 
 
 def pq_fit(df: DataFrame, m: int = 8, k: int = 16, n_iter: int = 5,
@@ -1246,7 +1150,7 @@ def pq_fit(df: DataFrame, m: int = 8, k: int = 16, n_iter: int = 5,
         for j in range(m)
     ]
     if encode_method == "auto":
-        encode_method = "literal" if k <= 256 else "numpy"
+        encode_method = "literal" if k <= _LITERAL_MAX_K else "numpy"
     for _ in range(n_iter):
         if encode_method == "numpy":
             ex = _pq_encode_numpy(base, books, vec_col, "__code").select(
@@ -1750,7 +1654,7 @@ def semdedup_pairs(df: DataFrame, centroids,
         # assignment + fat-cell probe it already ran for component-
         # backend routing, so the pairs route costs no extra pass.
         base = _celled if _celled is not None else _make_celled(
-            src, centroids, cells, vec_col, id_col, assign_method,
+            src, centroids, cells, vec_col, assign_method,
             vec_dim=vec_dim)
         # semdedup()'s shared cache already carries __norm (r15) —
         # recomputing it here would shadow the cached column with a
@@ -1829,8 +1733,7 @@ def semdedup_pairs(df: DataFrame, centroids,
 
 
 def _make_celled(src: DataFrame, centroids, cells: Column | None,
-                 vec_col: str, id_col: str,
-                 assign_method: str,
+                 vec_col: str, assign_method: str,
                  vec_dim: int | None = None) -> DataFrame:
     """The celled projection behind SemDeDup: either the centroid-family
     argmin (:func:`assign_cells`) or a caller-supplied quantizer
@@ -1883,8 +1786,7 @@ def _make_celled(src: DataFrame, centroids, cells: Column | None,
                 f"F.xxhash64(expr)")
         return out
     return assign_cells(src, centroids, vec_col=vec_col,
-                        out_col="__cell", id_col=id_col,
-                        method=assign_method)
+                        out_col="__cell", method=assign_method)
 
 
 # component_backend="auto" routes to the cell-local kernel when the
@@ -2002,7 +1904,7 @@ def semdedup(df: DataFrame, centroids,
             n_probe == 1 and component_backend == "auto"
             and cell_task_cap is not None):
         src = fan_out(df).select(F.col(id_col), F.col(vec_col))
-        celled = _make_celled(src, centroids, cells, vec_col, id_col,
+        celled = _make_celled(src, centroids, cells, vec_col,
                               assign_method, vec_dim=vec_dim)
         if component_backend == "auto":
             # ONE assignment pass serves the routing probe AND the
@@ -2195,15 +2097,14 @@ def semantic_contaminated_ids(corpus: DataFrame, benchmark: DataFrame,
     # runtime INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND whenever the inputs'
     # lineage overlaps or the corpus frame was used in an earlier
     # higher-order-function query (bisected r9, pinned in
-    # tests/test_r9_fixes.py; the numpy/join assignment lanes are
+    # tests/test_r9_fixes.py; the numpy assignment lane is
     # immune — the Arrow kernel is opaque to constraint inference).
     # "auto" therefore resolves to the numpy kernel here; pass
     # method="literal" explicitly only for fresh-lineage inputs.
     c_method = "numpy" if assign_method == "auto" else assign_method
     c = assign_cells(
         corpus.select(F.col(id_col), F.col(vec_col)),
-        centroids, vec_col=vec_col, out_col="__cell", id_col=id_col,
-        method=c_method,
+        centroids, vec_col=vec_col, out_col="__cell", method=c_method,
     ).select(
         F.col(id_col), F.col(vec_col).alias("__vc"), F.col("__cell"),
         norm(F.col(vec_col)).alias("__nc"),
@@ -2211,7 +2112,7 @@ def semantic_contaminated_ids(corpus: DataFrame, benchmark: DataFrame,
     b = assign_cells(
         benchmark.select(F.col(vec_col)),
         centroids, vec_col=vec_col, out_col="__cell",
-        method="numpy" if assign_method == "join" else assign_method,
+        method=assign_method,
     ).select(
         F.col("__cell"), F.col(vec_col).alias("__vb"),
         norm(F.col(vec_col)).alias("__nb"),
@@ -2487,7 +2388,8 @@ def ivfpq_encode(df: DataFrame, centroids: list[list[float]],
     literal (the r6 large-k ceiling, retired for indexes too)."""
     vec = F.col(vec_col)
     if assign_method == "auto":
-        assign_method = "literal" if len(centroids) <= 256 else "numpy"
+        assign_method = ("literal" if len(centroids) <= _LITERAL_MAX_K
+                         else "numpy")
     if assign_method == "literal":
         staged = df.withColumn("cell", kmeans_cell(vec_col, centroids))
         if residual:

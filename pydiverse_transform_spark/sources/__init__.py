@@ -33,8 +33,8 @@ def _name_from_path(path: str) -> str:
 # (0 jobs).  This is metadata caching only — every returned frame
 # recomputes its data from the files.  The cache entry carries a local
 # filesystem fingerprint (file count / bytes / max mtime plus a sorted
-# per-file (name, size, mtime) digest, r15); when the files changed,
-# or the path is not confidently local, we fall back to plain
+# per-file (name, size, mtime, inode, ctime) digest); when the files
+# changed, or the path is not confidently local, we fall back to plain
 # inference, so a rewritten path can never be misread.  Entries of
 # stopped applications are evicted on access (r15).
 # ---------------------------------------------------------------------------
@@ -44,6 +44,7 @@ _FP_MAX_FILES = 4096
 
 
 def _local_fingerprint(path: str):
+    import itertools
     import os
     import stat as _stat
 
@@ -62,36 +63,36 @@ def _local_fingerprint(path: str):
         st = os.stat(p)
     except OSError:
         return None
-    if not _stat.S_ISDIR(st.st_mode):
-        return (1, st.st_size, st.st_mtime_ns)
-    n = sz = mt = 0
+    # a single-file path is a one-entry walk: one code path, one digest
+    walk = ((os.path.join(root, f) for root, _dirs, fs in os.walk(p)
+             for f in fs) if _stat.S_ISDIR(st.st_mode) else [p])
+    files = list(itertools.islice(walk, _FP_MAX_FILES + 1))
+    if len(files) > _FP_MAX_FILES:
+        # too many files to fingerprint cheaply — skip caching
+        return None
+    sz = mt = 0
     entries = []
-    for root, _dirs, files in os.walk(p):
-        for f in files:
-            fp = os.path.join(root, f)
-            try:
-                fst = os.stat(fp)
-            except OSError:
-                return None
-            n += 1
-            if n > _FP_MAX_FILES:
-                # too many files to fingerprint cheaply — skip caching
-                return None
-            sz += fst.st_size
-            mt = max(mt, fst.st_mtime_ns)
-            entries.append((os.path.relpath(fp, p), fst.st_size,
-                            fst.st_mtime_ns))
-    # per-file (name, size, mtime) digest (r15, ADVICE r14): the
-    # aggregate (count, bytes, max-mtime) triple could serve a stale
-    # schema after a same-size rewrite landing within one mtime tick
-    # on a coarse-granularity filesystem; hashing the sorted per-file
-    # identities closes that window
+    for fp in files:
+        try:
+            fst = os.stat(fp)
+        except OSError:
+            return None
+        sz += fst.st_size
+        mt = max(mt, fst.st_mtime_ns)
+        entries.append((os.path.relpath(fp, p), fst.st_size,
+                        fst.st_mtime_ns, fst.st_ino, fst.st_ctime_ns))
+    # per-file digest (r15, ADVICE r14): the aggregate (count, bytes,
+    # max-mtime) triple could serve a stale schema after a same-size
+    # rewrite.  (name, size, mtime) alone still misses one landing
+    # within one mtime tick, or with its mtime restored; a rewrite
+    # changes the inode (write-and-rename) or the ctime (in place),
+    # which no user call can set back
     import hashlib
 
     h = hashlib.sha256()
     for e in sorted(entries):
         h.update(repr(e).encode())
-    return (n, sz, mt, h.hexdigest())
+    return (len(files), sz, mt, h.hexdigest())
 
 
 def spark_read_parquet(spark: SparkSession, path: str):

@@ -1,14 +1,17 @@
 """Cell-assignment cost sweep over k (r7 verdict #2 / r8 verdict #1
 evidence).
 
-Measures wall-clock and plan size for assign_cells' strategies at
-k in {64, 1024, 8192} on the sf embeddings table, materialized with the
-noop sink.  Shows that the numpy (broadcast-matrix mapInPandas) path's
+Measures wall-clock and plan size for assign_cells' two strategies
+(literal, numpy) at k in {64, 1024, 8192} on the sf embeddings table,
+materialized with the noop sink.  Shows that the numpy (broadcast-matrix mapInPandas) path's
 PLAN stays flat in k and its per-row cost grows only with the BLAS
 matmul (k*dim FLOPs), while the literal path's plan grows ~linearly in
-k*dim and its interpreted fold cost explodes — i.e. why literal is
-capped at max_literal_k and SemDeDup's "raise k until a cell fits a
-task" rule is now viable to the paper's ~110k cells.
+k*dim and its interpreted fold cost explodes — i.e. why auto routes
+to literal only up to ``similarity._LITERAL_MAX_K`` cells and
+SemDeDup's "raise k until a cell fits a task" rule is now viable to
+the paper's ~110k cells.  The committed ASSIGN_SWEEP_r07/r08.json also
+carry a third lane ("join"), since removed: it lost to numpy at every
+k.
 
 With a LARGE_CORPUS dir (second positional arg), additionally runs the
 k=110k operating-point proof on it (r8): numpy assignment at
@@ -59,12 +62,11 @@ def main():
     for k in (64, 1024, 8192):
         cents = rng.random((k, 64)).tolist()
         row = {"k": k, "n_rows": n_rows}
-        for method in ("literal", "numpy", "join"):
+        for method in ("literal", "numpy"):
             if method == "literal" and k > 1024:
                 row[method] = None  # interpreted fold + plan literal:
                 continue            # the exact ceiling being retired
-            kw = {"id_col": "vec_id"} if method == "join" else {}
-            df = sim.assign_cells(emb, cents, method=method, **kw)
+            df = sim.assign_cells(emb, cents, method=method)
             plan_chars = len(df._jdf.queryExecution()
                              .optimizedPlan().toString())
             times = [run(df) for _ in range(2)]

@@ -1,15 +1,17 @@
-"""Hypothesis differential fuzz of assign_cells' three physical
-strategies (r8 verdict #5, contract narrowed per r8 VERDICT finding
-#1): on the guaranteed-agreement domain (finite vectors, |v| < 1e150,
-unique ids, winning margin ABOVE the direct formulation's rounding
-error) literal, numpy and join must return ONE answer — including
-NULL vectors, duplicate-distance ties (values drawn from a tiny grid
-to force them), and duplicate centroids.  When the winning margin is
-below a few ulps of the largest squared term, the direct Σ(x−c)²
-forms (literal/join) legitimately see a tie the dot-trick (numpy)
-still resolves — exact cross-strategy equality is mathematically
-unsatisfiable there, so the test only requires every strategy's
-answer to sit in the near-tied cell set.  The documented
+"""Hypothesis differential fuzz of the nearest-centroid strategies
+(r8 verdict #5, contract narrowed per r8 VERDICT finding #1):
+assign_cells' literal and numpy lanes plus assign_cells_multi's
+nearest cell (n_probe=1 — the broadcast-matrix kernel's stable-argsort
+caller).  On the guaranteed-agreement domain (finite vectors,
+|v| < 1e150, winning margin ABOVE the direct formulation's rounding
+error) all three must return ONE answer — including NULL vectors,
+duplicate-distance ties (values drawn from a tiny grid to force them),
+and duplicate centroids.  When the winning margin is below a few ulps
+of the largest squared term, the direct Σ(x−c)² form (literal)
+legitimately sees a tie the dot-trick (numpy, multi) still resolves
+— exact cross-strategy equality is mathematically unsatisfiable
+there, so the test only requires every strategy's answer to sit in
+the near-tied cell set.  The documented
 strategy-DEPENDENT edges (NaN / ±Inf / overflow magnitudes / null
 components — see the assign_cells docstring's edge-input contract)
 are pinned by fixture tests instead.
@@ -22,6 +24,7 @@ import math
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from pydiverse_transform_spark.extras import similarity as sim
 
@@ -55,8 +58,11 @@ centroids_strategy = st.lists(
 def _assign(spark, rows, centroids, method):
     df = spark.createDataFrame(
         rows, f"vec_id int, embedding array<double>")
-    kw = {"id_col": "vec_id"} if method == "join" else {}
-    out = sim.assign_cells(df, centroids, method=method, **kw)
+    if method == "multi":
+        out = sim.assign_cells_multi(df, centroids, n_probe=1) \
+            .select("vec_id", F.col("__cells")[0].alias("__cell"))
+    else:
+        out = sim.assign_cells(df, centroids, method=method)
     return [(r["vec_id"], r["__cell"])
             for r in out.select("vec_id", "__cell")
             .orderBy("vec_id").collect()]
@@ -102,26 +108,26 @@ def test_three_strategies_one_answer(spark, vectors, centroids):
     rows = [(i, v) for i, v in enumerate(vectors)]
     lit = _assign(spark, rows, centroids, "literal")
     npy = _assign(spark, rows, centroids, "numpy")
-    jn = _assign(spark, rows, centroids, "join")
-    for (vid, v), (_, cl), (_, cn), (_, cj) in zip(rows, lit, npy, jn):
+    mul = _assign(spark, rows, centroids, "multi")
+    for (vid, v), (_, cl), (_, cn), (_, cm) in zip(rows, lit, npy, mul):
         if v is None:
-            assert cl is None and cn is None and cj is None, vid
+            assert cl is None and cn is None and cm is None, vid
             continue
         near = _near_tied_cells(v, centroids)
         if len(near) == 1:
             want = next(iter(near))
-            assert cl == cn == cj == want, (vid, cl, cn, cj, near)
+            assert cl == cn == cm == want, (vid, cl, cn, cm, near)
         else:
             # sub-ulp margin (or an exact tie): every strategy must
             # still land on a near-tied cell, but they may differ
-            assert cl in near and cn in near and cj in near, \
-                (vid, cl, cn, cj, near)
+            assert cl in near and cn in near and cm in near, \
+                (vid, cl, cn, cm, near)
     # grid-valued inputs are exact in binary64, so ALL strategies must
     # match the pure-Python twin exactly (ties to the lowest cid)
     if all(v is None or all(abs(x) in (0.0, 0.5, 1.0) for x in v)
            for v in vectors):
         ref = _reference(rows, centroids)
-        assert lit == npy == jn == ref
+        assert lit == npy == mul == ref
 
 
 @given(vectors=st.lists(st.lists(grid_component, min_size=DIM,
@@ -135,8 +141,7 @@ def test_duplicate_centroids_tie_to_lowest(spark, vectors, n_dup):
     base = [[0.0, 0.0, 0.0], [1.0, 1.0, 1.0]]
     centroids = [c for c in base for _ in range(n_dup)]
     rows = [(i, v) for i, v in enumerate(vectors)]
-    for method, kw in (("literal", {}), ("numpy", {}),
-                       ("join", {"id_col": "vec_id"})):
+    for method in ("literal", "numpy", "multi"):
         got = _assign(spark, rows, centroids, method)
         assert all(c % n_dup == 0 for _, c in got), (method, got)
 
@@ -147,7 +152,7 @@ def test_duplicate_centroids_tie_to_lowest(spark, vectors, n_dup):
 
 def _all(spark, rows, centroids):
     return {m: _assign(spark, rows, centroids, m)
-            for m in ("literal", "numpy", "join")}
+            for m in ("literal", "numpy", "multi")}
 
 
 def test_nan_component_assigns_lowest_cid_everywhere(spark):
@@ -167,36 +172,37 @@ def test_dim_mismatch_and_empty_are_null_everywhere(spark):
 
 
 def test_null_component_contract(spark):
-    # literal/join null-propagate; numpy sees Arrow-converted NaN and
-    # follows the NaN contract (documented divergence)
+    # literal null-propagates; the broadcast-matrix kernel (numpy,
+    # multi) sees Arrow-converted NaN and follows the NaN contract
+    # (documented divergence)
     rows = [(1, [None, 0.0, 0.0])]
     cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
     got = _all(spark, rows, cents)
     assert got["literal"] == [(1, None)]
-    assert got["join"] == [(1, None)]
     assert got["numpy"] == [(1, 0)]
+    assert got["multi"] == [(1, 0)]
 
 
 def test_infinity_is_strategy_dependent_as_documented(spark):
-    # literal/join: ||x-c||^2 = +Inf for every centroid -> lowest cid;
-    # numpy: x.c keeps the sign of the infinity -> resolves by
+    # literal: ||x-c||^2 = +Inf for every centroid -> lowest cid;
+    # numpy/multi: x.c keeps the sign of the infinity -> resolves by
     # direction (here: towards centroid 1)
     inf = float("inf")
     rows = [(1, [inf, 0.0, 0.0])]
     cents = [[-1.0, 0.0, 0.0], [1.0, 0.0, 0.0]]
     got = _all(spark, rows, cents)
     assert got["literal"] == [(1, 0)]
-    assert got["join"] == [(1, 0)]
     assert got["numpy"] == [(1, 1)]
+    assert got["multi"] == [(1, 1)]
 
 
 def test_overflow_magnitude_is_strategy_dependent_as_documented(spark):
-    # |v| ~ 1e200: the squared distance overflows to +Inf (literal/join
-    # collapse to the lowest cid) while the dot product stays finite
-    # (numpy picks the genuinely nearer centroid 1)
+    # |v| ~ 1e200: the squared distance overflows to +Inf (literal
+    # collapses to the lowest cid) while the dot product stays finite
+    # (numpy/multi pick the genuinely nearer centroid 1)
     rows = [(1, [1e200, 0.0, 0.0])]
     cents = [[-1.0, 0.0, 0.0], [1.0, 0.0, 0.0]]
     got = _all(spark, rows, cents)
     assert got["literal"] == [(1, 0)]
-    assert got["join"] == [(1, 0)]
     assert got["numpy"] == [(1, 1)]
+    assert got["multi"] == [(1, 1)]

@@ -311,6 +311,37 @@ def test_schema_fingerprint_detects_same_size_rename(spark, tmp_path):
     assert fp1[3] != fp2[3]        # digest sees the rename
 
 
+def test_schema_fingerprint_detects_single_file_rewrite(spark, tmp_path):
+    """A single-file parquet path rewritten at the same size with its
+    mtime restored must not serve the cached schema: the single-file
+    path gets the same per-file digest (inode, ctime) as a directory."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pydiverse_transform_spark.sources import (
+        _local_fingerprint,
+        spark_read_parquet,
+    )
+
+    p = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), p)
+    assert spark_read_parquet(spark, p).columns == ["a"]
+    st = os.stat(p)
+    fp1 = _local_fingerprint(p)
+    tmp = p + ".tmp"
+    pq.write_table(pa.table({"b": [1, 2, 3]}), tmp)
+    assert os.path.getsize(tmp) == st.st_size
+    os.replace(tmp, p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(p).st_mtime_ns == st.st_mtime_ns
+    assert _local_fingerprint(p) != fp1
+    df = spark_read_parquet(spark, p)
+    assert df.columns == ["b"]
+    assert [r["b"] for r in df.orderBy("b").collect()] == [1, 2, 3]
+
+
 def test_schema_cache_evicts_stopped_applications(spark, tmp_path):
     from pydiverse_transform_spark.sources import (
         _SCHEMA_CACHE,

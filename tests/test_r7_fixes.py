@@ -26,7 +26,7 @@ def _emb(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# assign_cells: three physical strategies, one answer
+# assign_cells: two physical strategies, one answer
 # ---------------------------------------------------------------------------
 
 def _cells(df, centroids, method, **kw):
@@ -42,8 +42,7 @@ def test_assign_cells_paths_agree(spark, sf_dir):
     cents = sim.kmeans_spread_seeds(emb, 16)
     lit = _cells(emb, cents, "literal")
     npy = _cells(emb, cents, "numpy")
-    jn = _cells(emb, cents, "join", id_col="vec_id")
-    assert lit == npy == jn
+    assert lit == npy
     assert len({c for _, c in lit}) > 1  # not degenerate
 
 
@@ -68,7 +67,7 @@ def test_assign_cells_auto_dispatch_and_null_vec(spark):
     out = sim.assign_cells(df, cents, method="numpy") \
         .orderBy("vec_id").collect()
     assert [r["__cell"] for r in out] == [0, 1, None]
-    with pytest.raises(ValueError, match="id_col"):
+    with pytest.raises(ValueError, match="auto|literal|numpy"):
         sim.assign_cells(df, cents, method="join")
     with pytest.raises(ValueError, match="auto"):
         sim.assign_cells(df, cents, method="bogus")
@@ -107,7 +106,7 @@ def test_semdedup_accepts_dataframe_centroids(spark, sf_dir):
     c = sorted(
         tuple(r) for r in
         sim.semdedup_pairs(emb, cdf, threshold=0.0,
-                           assign_method="join").collect())
+                           assign_method="literal").collect())
     assert a == b == c and len(a) > 0
     kept_list = sorted(r["vec_id"] for r in
                        sim.semdedup(emb, cents, threshold=0.0)
@@ -179,10 +178,10 @@ def test_ivfpq_encode_assign_methods_agree(spark, sf_dir):
 
 
 def test_ivfpq_large_k_end_to_end(spark, sf_dir, tmp_path):
-    """k=300 coarse cells (> max_literal_k): the whole index lifecycle
-    — write (numpy assignment + broadcast residual), sidecar, query —
-    must work without a plan literal, and the top-1 of a member query
-    must be the member itself."""
+    """k=300 coarse cells (above the 256-cell literal cap): the whole
+    index lifecycle — write (numpy assignment + broadcast residual),
+    sidecar, query — must work without a plan literal, and the top-1
+    of a member query must be the member itself."""
     emb = _emb(spark, sf_dir)
     import numpy as np
 

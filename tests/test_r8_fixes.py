@@ -168,8 +168,8 @@ def test_assign_cells_multi_boundary_ties_to_lowest_cid(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE (low): the join strategy's null-vector contract must match
-# numpy/literal (null cell, row preserved)
+# ADVICE (low): every strategy keeps a null-vector row with a null cell;
+# the join strategy is removed and its method name now raises
 # ---------------------------------------------------------------------------
 
 def test_assign_cells_join_null_vector_matches_other_paths(spark):
@@ -178,11 +178,12 @@ def test_assign_cells_join_null_vector_matches_other_paths(spark):
         [(1, [0.5, 0.2], "a"), (2, [9.0, 9.5], "b"), (3, None, "c")],
         "vec_id int, embedding array<double>, tag string")
     expected = [(1, "a", 0), (2, "b", 1), (3, "c", None)]
-    for method, kw in (("literal", {}), ("numpy", {}),
-                       ("join", {"id_col": "vec_id"})):
-        rows = sim.assign_cells(df, cents, method=method, **kw) \
+    for method in ("literal", "numpy"):
+        rows = sim.assign_cells(df, cents, method=method) \
             .select("vec_id", "tag", "__cell").orderBy("vec_id").collect()
         assert [tuple(r) for r in rows] == expected, method
+    with pytest.raises(ValueError, match="auto|literal|numpy"):
+        sim.assign_cells(df, cents, method="join")
 
 
 # ---------------------------------------------------------------------------

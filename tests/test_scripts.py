@@ -24,3 +24,21 @@ def test_bench_sf_spot_rejects_bad_argv(args):
     assert proc.returncode == 2
     assert proc.stderr.startswith("usage: ")
     assert "Traceback" not in proc.stderr
+
+
+PLANS = os.path.join(os.path.dirname(SPOT), "capture_plans.py")
+
+
+@pytest.mark.parametrize("args", [
+    [], ["r15"], ["--bogus", "before"], ["r15", "--bogus"],
+    ["../r15", "before"], ["r15", "before", "q_no_such_query"],
+])
+def test_capture_plans_rejects_bad_argv(args):
+    """Same contract as bench_sf_spot.py: exit 2 with a usage line, no
+    traceback, and no Spark session started (no JVM log output)."""
+    proc = subprocess.run([sys.executable, PLANS, *args],
+                          capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 2
+    assert proc.stderr.startswith("usage: ")
+    assert "Traceback" not in proc.stderr
+    assert "Spark" not in proc.stderr + proc.stdout
