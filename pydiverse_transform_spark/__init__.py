@@ -108,6 +108,7 @@ from .sources.sinks import (  # noqa: F401
     write_sorted,
     write_time_partitioned,
 )
+from .storage import scope  # noqa: F401
 from .table import Table  # noqa: F401
 from .targets import (  # noqa: F401
     Arrow,

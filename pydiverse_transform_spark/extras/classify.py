@@ -21,65 +21,12 @@ oracle can replay training AND scoring exactly.
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["nb_train", "nb_score", "bigram_lm_train",
-           "bigram_lm_train_scoped", "lm_score"]
+from ..storage import hold
 
-
-# last persisted gram table per application (r15, VERDICT r14
-# what's-wrong #2 / ADVICE): bigram_lm_train persists its vocab-sized
-# gram relation so ctx and lm_score's two broadcasts share ONE corpus
-# tokenize pass, but the lazy API has no point at which the plain
-# function could unpersist it — so a long session retraining on many
-# corpora used to accumulate one cached relation per corpus.  The
-# registry bounds that at ONE: a new train over a DIFFERENT corpus
-# releases the previous cache first.  Retraining over the SAME plan
-# keeps the existing entry (Spark's CacheManager already dedupes
-# identical plans — unpersisting it would only force a cold rebuild of
-# the same data).  Callers who need deterministic release use
-# :func:`bigram_lm_train_scoped`.
-_LM_GRAM_CACHE: dict = {}
-
-
-def _lm_register_gram_cache(grams: DataFrame) -> None:
-    key = grams.sparkSession.sparkContext.applicationId
-    prev = _LM_GRAM_CACHE.get(key)
-    if prev is not None and prev is not grams:
-        try:
-            same = prev._jdf.queryExecution().analyzed().sameResult(
-                grams._jdf.queryExecution().analyzed())
-        except Exception:
-            # an unanswerable probe (no _jdf, e.g. Spark Connect) must
-            # not drop a cache the new grams may share — only a
-            # confirmed different plan releases prev
-            same = True
-        if not same:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-    # entries of stopped applications hold dead JVM refs — drop them
-    for k in list(_LM_GRAM_CACHE):
-        if k != key:
-            _LM_GRAM_CACHE.pop(k, None)
-    _LM_GRAM_CACHE[key] = grams
-
-
-def _lm_release_gram_cache(grams: DataFrame) -> None:
-    try:
-        key = grams.sparkSession.sparkContext.applicationId
-        if _LM_GRAM_CACHE.get(key) is grams:
-            _LM_GRAM_CACHE.pop(key, None)
-    except Exception:
-        pass
-    try:
-        grams.unpersist()
-    except Exception:
-        pass
+__all__ = ["nb_train", "nb_score", "bigram_lm_train", "lm_score"]
 
 
 def _doc_tokens(df: DataFrame, text_col: str) -> Column:
@@ -190,53 +137,33 @@ def bigram_lm_train(df: DataFrame, text_col: str = "text"
     'reads like' the reference): returns (bigram_counts, context_counts)
     DataFrames — ('w1 w2', count) and (w1, count, vocab-size scalar
     folded in at scoring).  Two map-side-combined hash aggregations
-    over one explode each; both outputs are vocabulary-sized."""
+    over one explode each; both outputs are vocabulary-sized.
+
+    The gram table is persisted so ``ctx`` and ``lm_score``'s two
+    broadcasts share ONE corpus tokenize pass.  Inside
+    :func:`pydiverse_transform_spark.scope` the cache is released when
+    the scope exits; outside one, the next ``bigram_lm_train`` on a
+    different corpus releases it (same-corpus retrains share it)."""
     from pyspark.storagelevel import StorageLevel
 
-    grams = (
+    # persist the VOCABULARY-sized gram table: ctx below (and the
+    # separate broadcast builds in lm_score) would otherwise each
+    # re-run the corpus tokenize+explode+agg — the dominant cost
+    # (r14, guide §2.4/§5: q_lm_perplexity's plan showed the corpus
+    # scanned+bigrammed twice just for training).  Lazy (no job
+    # here); vocab-sized, so the cache cost is negligible at any
+    # corpus scale while the saved pass is a full corpus scan.
+    grams = hold(
         df.select(F.explode(_doc_bigrams(text_col)).alias("bigram"))
         .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n_bigram"))
-        # persist the VOCABULARY-sized gram table: ctx below (and the
-        # separate broadcast builds in lm_score) would otherwise each
-        # re-run the corpus tokenize+explode+agg — the dominant cost
-        # (r14, guide §2.4/§5: q_lm_perplexity's plan showed the corpus
-        # scanned+bigrammed twice just for training).  Lazy (no job
-        # here); vocab-sized, so the cache cost is negligible at any
-        # corpus scale while the saved pass is a full corpus scan.
-        # Lifetime is bounded by the per-application registry (r15):
-        # at most one gram cache is live; use
-        # :func:`bigram_lm_train_scoped` for deterministic release.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _lm_register_gram_cache(grams)
+        .agg(F.count(F.lit(1)).alias("n_bigram")),
+        "bigram_lm_train", StorageLevel.MEMORY_AND_DISK)
     ctx = (
         grams.withColumn("w1", F.split(F.col("bigram"), " ")[0])
         .groupBy("w1")
         .agg(F.sum("n_bigram").alias("n_ctx"))
     )
     return grams, ctx
-
-
-@_contextlib.contextmanager
-def bigram_lm_train_scoped(df: DataFrame, text_col: str = "text"):
-    """:func:`bigram_lm_train` with a bounded gram-cache lifetime
-    (r15, the scoped-release pattern of
-    ``dedup.minhash_index_lookup_scoped``): yields ``(grams, ctx)``
-    and unpersists the gram table when the block exits — storage
-    returns to baseline (pinned in ``tests/test_r15_opt.py``).
-    Consume every derived frame (``lm_score`` output included) INSIDE
-    the block; consuming after it is still correct, it just recomputes
-    the training aggregation instead of reading the cache::
-
-        with bigram_lm_train_scoped(ref_docs) as (grams, ctx):
-            lm_score(docs, grams, ctx).write.parquet(out)
-    """
-    grams, ctx = bigram_lm_train(df, text_col)
-    try:
-        yield grams, ctx
-    finally:
-        _lm_release_gram_cache(grams)
 
 
 def lm_score(df: DataFrame, bigrams: DataFrame, contexts: DataFrame,

@@ -11,12 +11,11 @@ Scale design notes (100 TB target):
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import fan_out, render
+from ..storage import hold, owned
+from .util import _small_corpus, fan_out, render
 
 __all__ = [
     "exact_dedup", "exact_dedup_rows", "word_shingles", "char_shingles",
@@ -295,8 +294,9 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
     # 3.0 s at sf1, scripts/profile_minhash.py).  Buckets are tiny —
     # (id, band, 32-char hash) × bands rows per doc — so this stays cheap
     # at 100 TB where persisting shingle arrays would not.
-    buckets = _band_buckets(shingled(df, text_col, id_col, k), id_col,
-                            n_hashes, bands).persist()
+    buckets = hold(_band_buckets(shingled(df, text_col, id_col, k),
+                                 id_col, n_hashes, bands),
+                   "lsh_candidate_pairs")
     right = buckets.withColumnRenamed(id_col, "id_b")
     pairs = (
         buckets.withColumnRenamed(id_col, "id_a")
@@ -315,15 +315,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union == 0, F.lit(0.0)).otherwise(
         inter.cast("double") / union.cast("double")
     )
-
-
-# shared small-corpus heuristic: below SMALL_CORPUS_BYTES the whole
-# shingle projection is persisted and reused for verification; above
-# it, only candidate documents are re-shingled.  Shingle arrays
-# materialize at roughly 10x the parquet bytes, so "small" means "the
-# full shingle corpus trivially fits executor storage memory".
-from .util import SMALL_CORPUS_BYTES as _SMALL_CORPUS_BYTES
-from .util import plan_size_bytes as _plan_size_bytes
 
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
@@ -350,20 +341,28 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
       pipeline's memory footprint independent of corpus size; measured
       slope drops from 4.3x to ~2.1x per 10x data (SCALE.md).
 
-    ``persist_shingles=None`` picks by Catalyst's sizeInBytes estimate.
+    ``persist_shingles=None`` picks by Catalyst's sizeInBytes estimate:
+    shingle arrays materialize at roughly 10x the parquet bytes, so
+    only a small corpus's full shingle projection fits executor
+    storage memory trivially.  The persisted relations back the lazily
+    returned frame; see :func:`pydiverse_transform_spark.scope` for
+    their lifetime.
     """
     if persist_shingles is None:
-        persist_shingles = _plan_size_bytes(df) < _SMALL_CORPUS_BYTES
+        persist_shingles = _small_corpus(df)
 
     if persist_shingles:
-        sh = shingled(df, text_col, id_col, k).persist()
+        sh = hold(shingled(df, text_col, id_col, k),
+                  "minhash_dedup_pairs.shingles")
         # buckets persisted too: the self-join below otherwise runs the
         # signature fold twice even over persisted shingles
-        cands = _band_buckets(sh, id_col, n_hashes, bands).persist()
+        cands = hold(_band_buckets(sh, id_col, n_hashes, bands),
+                     "minhash_dedup_pairs.buckets")
     else:
         sh = None
-        cands = _band_buckets(shingled(df, text_col, id_col, k), id_col,
-                              n_hashes, bands).persist()
+        cands = hold(_band_buckets(shingled(df, text_col, id_col, k),
+                                   id_col, n_hashes, bands),
+                     "minhash_dedup_pairs.buckets")
     right = cands.withColumnRenamed(id_col, "id_b")
     pairs = (
         cands.withColumnRenamed(id_col, "id_a")
@@ -376,7 +375,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
         # candidate-only re-shingle: semi-join the raw input down to the
         # documents that appear in a candidate pair (AQE broadcasts the
         # id list when small), shingle just those
-        pairs = pairs.persist()
+        pairs = hold(pairs, "minhash_dedup_pairs.pairs")
         cand_ids = (
             pairs.select(F.col("id_a").alias(id_col))
             .union(pairs.select(F.col("id_b").alias(id_col)))
@@ -384,7 +383,8 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
         )
         # persisted: both sides of the verification join read it, and it
         # is only the candidate docs (~7% of the corpus at sf1)
-        sh = shingled(df.join(cand_ids, id_col), text_col, id_col, k).persist()
+        sh = hold(shingled(df.join(cand_ids, id_col), text_col, id_col, k),
+                  "minhash_dedup_pairs.shingles")
     a = sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "sh_a")
     b = sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "sh_b")
     return (
@@ -626,21 +626,20 @@ def connected_components(pairs: DataFrame, a: str = "id_a",
         return _cc_driver(pairs, head, a, b)
 
     if strategy != "distributed":
-        lim = (pairs.select(F.col(a), F.col(b))
-               .limit(driver_max_pairs + 1)
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        n_edges = lim.count()
-        if n_edges <= driver_max_pairs:
-            # the LIMIT was not reached, so the cached rows are ALL
-            # the rows — the collect reads the cache, no recompute
-            head = lim.collect()
-            lim.unpersist()
+        with owned() as own:
+            lim = own.persist(pairs.select(F.col(a), F.col(b))
+                              .limit(driver_max_pairs + 1),
+                              StorageLevel.MEMORY_AND_DISK)
+            # the LIMIT not reached means the cached rows are ALL the
+            # rows — the collect reads the cache, no recompute.  Over
+            # cap they are an arbitrary cap+1 subset, useless to the
+            # distributed route: the block drops them either way.
+            head = (lim.collect() if lim.count() <= driver_max_pairs
+                    else None)
+        if head is not None:
             if _rounds_out is not None:
                 _rounds_out.append(0)
             return _cc_driver(pairs, head, a, b)
-        # over cap: the bounded probe's rows are an arbitrary cap+1
-        # subset — useless to the distributed route; drop them now
-        lim.unpersist()
         if strategy == "driver":
             raise ValueError(
                 f"strategy='driver' but the graph exceeds "
@@ -648,72 +647,70 @@ def connected_components(pairs: DataFrame, a: str = "id_a",
 
     cut = _cut
 
-    e = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    edges = (
-        e.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with owned() as own:
+        e = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        edges = own.persist(
+            e.unionAll(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            ).distinct(),
+            StorageLevel.MEMORY_AND_DISK)
+        labels = cut(
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
         )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = cut(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    # the frame cut() actually returned — .drop() below wraps labels in
-    # a Project, so the release must target the checkpoint frame itself
-    cut_frame = labels
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        stepped = (
-            labels.join(nbr, labels["node"] == nbr["src"], "left")
-            .select(
-                labels["node"].alias("node"),
-                F.least(
-                    labels["comp"],
-                    F.coalesce(F.col("nbr_comp"), labels["comp"]),
-                ).alias("comp"),
-                labels["comp"].alias("__prev"),
+        # the frame cut() actually returned — .drop() below wraps labels in
+        # a Project, so the release must target the checkpoint frame itself
+        cut_frame = labels
+        rounds = 0
+        for _ in range(max_iter):
+            rounds += 1
+            nbr = (
+                edges.join(labels, edges["dst"] == labels["node"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-        )
-        # pointer jump: comp := min(comp, comp's own comp).  The label
-        # value is always a node id of the same component, so the
-        # self-join always finds its row; jumping makes the reached
-        # minimum spread multiplicatively across rounds.
-        ptr = stepped.select(F.col("node").alias("__pn"),
-                             F.col("comp").alias("__pc"))
-        jumped_comp = F.least(
-            stepped["comp"], F.coalesce(F.col("__pc"), stepped["comp"])
-        )
-        # the changed flag rides along in the update join, so the
-        # convergence probe below scans the checkpointed labels only —
-        # no second join, one extra boolean column per round
-        new_labels = cut(
-            stepped.join(ptr, stepped["comp"] == F.col("__pn"), "left")
-            .select(
-                stepped["node"].alias("node"),
-                jumped_comp.alias("comp"),
-                (jumped_comp < stepped["__prev"]).alias("changed"),
+            stepped = (
+                labels.join(nbr, labels["node"] == nbr["src"], "left")
+                .select(
+                    labels["node"].alias("node"),
+                    F.least(
+                        labels["comp"],
+                        F.coalesce(F.col("nbr_comp"), labels["comp"]),
+                    ).alias("comp"),
+                    labels["comp"].alias("__prev"),
+                )
             )
-        )
-        changed = new_labels.filter("changed").limit(1).count()
-        # the new checkpoint is materialized (eager) — the previous
-        # round's checkpointed labels can be released now instead of
-        # accumulating one persisted RDD per round (r14, guide §5:
-        # unpersist when done; matters at billion-edge round counts)
-        labels = new_labels.drop("changed")
-        _release_cut(cut_frame)
-        cut_frame = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
+            # pointer jump: comp := min(comp, comp's own comp).  The label
+            # value is always a node id of the same component, so the
+            # self-join always finds its row; jumping makes the reached
+            # minimum spread multiplicatively across rounds.
+            ptr = stepped.select(F.col("node").alias("__pn"),
+                                 F.col("comp").alias("__pc"))
+            jumped_comp = F.least(
+                stepped["comp"], F.coalesce(F.col("__pc"), stepped["comp"])
+            )
+            # the changed flag rides along in the update join, so the
+            # convergence probe below scans the checkpointed labels only —
+            # no second join, one extra boolean column per round
+            new_labels = cut(
+                stepped.join(ptr, stepped["comp"] == F.col("__pn"), "left")
+                .select(
+                    stepped["node"].alias("node"),
+                    jumped_comp.alias("comp"),
+                    (jumped_comp < stepped["__prev"]).alias("changed"),
+                )
+            )
+            changed = new_labels.filter("changed").limit(1).count()
+            # the new checkpoint is materialized (eager) — the previous
+            # round's checkpointed labels can be released now instead of
+            # accumulating one persisted RDD per round (r14, guide §5:
+            # unpersist when done; matters at billion-edge round counts)
+            labels = new_labels.drop("changed")
+            _release_cut(cut_frame)
+            cut_frame = new_labels
+            if changed == 0:
+                break
     if _rounds_out is not None:
         _rounds_out.append(rounds)
     return labels
@@ -725,15 +722,12 @@ def connected_components_star(pairs: DataFrame, a: str = "id_a",
     """(node, comp) like :func:`connected_components`, via alternating
     large-star / small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC 2014): converges in O(log² n) ROUNDS
-    INDEPENDENT OF GRAPH DIAMETER, where hash-min label propagation
-    needs O(diameter) rounds.
+    INDEPENDENT OF GRAPH DIAMETER.  The default distributed strategy,
+    hash-min with pointer jumping, needs O(log diameter) rounds (a
+    32-hop chain converges in <= 7), and does fewer shuffles per round.
 
-    Use this when duplicate chains can be long (transcription ladders,
-    near-identical crawl snapshots forming paths) — a 4096-node chain
-    finishes in ~6 rounds here vs 4096 hash-min rounds
-    (tests/test_connected_components.py).  For the dense, small-diameter
-    clusters LSH near-dup produces, plain hash-min does fewer total
-    shuffles per round and stays the default.
+    This remains available for pathological diameters — a 4096-node
+    chain finishes in ~6 rounds here (tests/test_connected_components.py).
 
     Per round: large-star hangs every neighbor v > u onto m = min of
     u's neighborhood; small-star then re-hangs the v <= u side.  Each
@@ -910,12 +904,10 @@ def contaminated_ids(df: DataFrame, probe: DataFrame,
     (pass ``method="broadcast"`` explicitly when you know).  This
     mirrors the UNKNOWN handling on ``_resolve_probe_strategy``.
 
-    The bloom lane persists the probe's shingle relation for the
-    call; the handle is released only by Spark's LRU eviction (there
-    is no correct earlier unpersist point — the returned join is
-    lazy), so a long-lived session issuing MANY bloom-lane calls
-    accumulates cached shingle relations until memory pressure evicts
-    them.  Harmless for correctness; storage-tab noise at worst.
+    The bloom lane's persisted probe shingles back the lazily
+    returned join: inside :func:`pydiverse_transform_spark.scope` they
+    are released when the scope exits, outside one by the next
+    bloom-lane call on a different probe.
     """
     from pyspark.sql.functions import broadcast
 
@@ -937,10 +929,8 @@ def contaminated_ids(df: DataFrame, probe: DataFrame,
     if method == "bloom":
         # shingle the probe ONCE: bloom_build's n_items count
         # materializes the cache, the bit-word aggregate and the exact
-        # verify below then read it.  Stays persisted until the caller
-        # finishes executing the returned (lazy) verify join — Spark
-        # evicts LRU, so there is no correct earlier unpersist point.
-        probe_sh = probe_sh.persist()
+        # verify below then read it
+        probe_sh = hold(probe_sh, "contaminated_ids")
         bloom = bloom_build(probe_sh, "__psh", fpp=fpp)
         doc_sh = bloom_filter_hits(doc_sh, bloom, "__psh")
         # exact verify over survivors only — NO broadcast hint: at
@@ -1617,14 +1607,10 @@ def _probe_hits_exists(spark, path: str, meta: dict, pb: DataFrame,
 
 def _resolve_probe_strategy(probe_strategy: str,
                             probe: DataFrame) -> str:
-    from .util import SMALL_CORPUS_BYTES, plan_size_bytes
-
     if probe_strategy not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"unknown probe_strategy {probe_strategy!r}")
     if probe_strategy == "auto":
-        return ("broadcast"
-                if plan_size_bytes(probe) <= SMALL_CORPUS_BYTES
-                else "shuffle")
+        return "broadcast" if _small_corpus(probe) else "shuffle"
     return probe_strategy
 
 
@@ -1904,32 +1890,17 @@ def minhash_index_lookup(spark, path: str, probe: DataFrame, *,
     stage differently); it only matters while auto is deciding.
 
     While auto decides, the probe's bucket relation is persisted so
-    its shingle+minhash pass is computed once (projection + lookup);
-    like the bloom lane's probe cache, the handle is released by
-    Spark's LRU eviction — the returned frame is lazy, so there is no
-    correct earlier unpersist point.  Long-lived sessions issuing
-    many default lookups accumulate cached bucket relations until
-    memory pressure evicts them (tiny for increment-sized probes);
-    SERVICE-style callers that consume each result promptly should
-    use :func:`minhash_index_lookup_scoped`, which unpersists the
-    relation when its block exits (r14)."""
-    return _minhash_index_lookup(
-        spark, path, probe, threshold=threshold,
-        probe_strategy=probe_strategy, min_bands=min_bands,
-        top_k=top_k, governors=governors, auto_budget=auto_budget)
+    its shingle+minhash pass is computed once (projection + lookup).
+    It backs the lazily returned frame: inside
+    :func:`pydiverse_transform_spark.scope` it is released when the
+    scope exits; outside one, the next default lookup on a different
+    probe releases it (a repeated identical lookup reuses it).
+    Service-style callers consume each result inside a scope::
 
-
-def _minhash_index_lookup(spark, path: str, probe: DataFrame, *,
-                          threshold: float = 0.0,
-                          probe_strategy: str = "auto",
-                          min_bands: int = 1,
-                          top_k: int | None = None,
-                          governors: str = "auto",
-                          auto_budget: int | None = None,
-                          _persist_out: list | None = None) -> DataFrame:
-    """Implementation of :func:`minhash_index_lookup`; ``_persist_out``
-    (scoped lane) collects any persisted probe-bucket handle so the
-    caller can release it when the result has been consumed."""
+        with pdt.scope():
+            pairs = minhash_index_lookup(spark, path, probe,
+                                         threshold=0.7)
+            pairs.write.parquet(out)"""
     if governors not in ("auto", "off"):
         raise ValueError(
             f"governors must be 'auto' or 'off', got {governors!r}")
@@ -1940,13 +1911,8 @@ def _minhash_index_lookup(spark, path: str, probe: DataFrame, *,
     pb = _probe_buckets(meta, probe)
     if governors == "auto" and min_bands == 1 and top_k is None:
         # persist so the probe's shingle+minhash pass isn't paid twice
-        # (once for the projection count, once for the lookup); tiny
-        # for the daily-increment shape, LRU-evicted otherwise — the
-        # returned frame is lazy, so there is no correct earlier
-        # unpersist point
-        pb = pb.persist()
-        if _persist_out is not None:
-            _persist_out.append(pb)
+        # (once for the projection count, once for the lookup)
+        pb = hold(pb, "minhash_index_lookup")
         from ..sources import spark_read_parquet as _srp
 
         idx = _srp(spark, path)
@@ -1971,36 +1937,6 @@ def _minhash_index_lookup(spark, path: str, probe: DataFrame, *,
     return _lookup_from_buckets(spark, path, meta, pb,
                                 threshold, strategy,
                                 min_bands=min_bands, top_k=top_k)
-
-
-@_contextlib.contextmanager
-def minhash_index_lookup_scoped(spark, path: str, probe: DataFrame,
-                                **kwargs):
-    """:func:`minhash_index_lookup` with a bounded probe-cache
-    lifetime (r14): the default ``governors="auto"`` lane persists the
-    probe's bucket relation so the shingle+minhash pass is computed
-    once for the projection AND the lookup — but the plain function
-    cannot know when the caller has consumed the lazy result, so the
-    handle lives until LRU eviction.  Service-style callers issuing
-    many lookups should use this context manager instead::
-
-        with minhash_index_lookup_scoped(spark, path, probe,
-                                         threshold=0.7) as pairs:
-            pairs.write.parquet(out)      # consume INSIDE the block
-
-    On exit the persisted relation is released (storage memory returns
-    to baseline — pinned in ``tests/test_r14_fixes.py``).  Consuming
-    the frame after the block is still CORRECT, it just recomputes the
-    probe hash pass instead of reading the cache.  Accepts every
-    ``minhash_index_lookup`` keyword."""
-    holder: list = []
-    df = _minhash_index_lookup(spark, path, probe,
-                               _persist_out=holder, **kwargs)
-    try:
-        yield df
-    finally:
-        for h in holder:
-            h.unpersist()
 
 
 def neardup_filter_new(spark, path: str, new_docs: DataFrame, *,
@@ -2047,9 +1983,9 @@ def neardup_filter_new(spark, path: str, new_docs: DataFrame, *,
     id_col = meta["id_col"]
     strategy = _resolve_probe_strategy(probe_strategy, new_docs)
     pb = _probe_buckets(meta, new_docs)
-    if admit:
-        pb = pb.persist()
-    try:
+    with owned() as own:
+        if admit:
+            pb = own.persist(pb)
         # exists-semantics lane (r14): the filter only needs "this
         # arrival HAS an indexed near-dup", never the pairs — the
         # distinct(probe_id) partial-aggregates map-side, so a
@@ -2067,7 +2003,4 @@ def neardup_filter_new(spark, path: str, new_docs: DataFrame, *,
                 path, meta,
                 pb.join(ids.withColumnRenamed(id_col, "probe_id"),
                         on="probe_id", how="left_semi"))
-    finally:
-        if admit:
-            pb.unpersist()
     return out

@@ -22,7 +22,8 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .util import render
+from ..storage import hold, owned
+from .util import _small_corpus, render
 
 _log = logging.getLogger(__name__)
 
@@ -1510,7 +1511,8 @@ def semdedup_pairs(df: DataFrame, centroids,
     (None) persists only when the input's size estimate is small (the
     same adaptive-materialization rule as ``minhash_dedup_pairs`` — at
     corpus scale the projection is the whole vector table and must NOT
-    be pinned).
+    be pinned).  The cache backs the lazily returned pairs; see
+    :func:`pydiverse_transform_spark.scope` for its lifetime.
 
     ``probe_margin`` (used only when ``n_probe > 1``) prunes
     multi-probe's candidate cost to the vectors actually near a cell
@@ -1569,7 +1571,7 @@ def semdedup_pairs(df: DataFrame, centroids,
       (measured at sf10).  Below the cap the two backends cost about
       the same and ``sql`` keeps plans Python-free and oracle-exact.
     """
-    from .util import SMALL_CORPUS_BYTES, fan_out, plan_size_bytes
+    from .util import fan_out
 
     if pair_backend not in ("auto", "sql", "numpy"):
         raise ValueError(f"pair_backend must be 'auto', 'sql' or "
@@ -1587,7 +1589,7 @@ def semdedup_pairs(df: DataFrame, centroids,
             f"cell_task_cap must be >= 1 (or None to disable the "
             f"fat-cell probe entirely), got {cell_task_cap}")
     if persist_celled is None:
-        persist_celled = plan_size_bytes(df) <= SMALL_CORPUS_BYTES
+        persist_celled = _small_corpus(df)
     src = fan_out(df).select(F.col(id_col), F.col(vec_col))
     if n_probe > 1:
         # DIRECTED multi-probe blocking (r8; replaces r7's symmetric
@@ -1620,7 +1622,7 @@ def semdedup_pairs(df: DataFrame, centroids,
             .drop("__pos", "__home")
         )
         if persist_celled:
-            celled = celled.persist()
+            celled = hold(celled, "semdedup_pairs")
         a = celled.filter(F.col("__is_home")).select(
             F.col("__cell"), F.col(id_col).alias("id_a"),
             F.col(vec_col).alias("va"), F.col("__norm").alias("na"),
@@ -1662,7 +1664,7 @@ def semdedup_pairs(df: DataFrame, centroids,
         celled = (base if "__norm" in base.columns
                   else base.withColumn("__norm", norm(F.col(vec_col))))
         if persist_celled:
-            celled = celled.persist()
+            celled = hold(celled, "semdedup_pairs")
         if _tmap is not _UNSET:
             tmap = _tmap
         else:
@@ -1831,8 +1833,10 @@ def semdedup(df: DataFrame, centroids,
 
     ``component_backend`` (r10) picks how components are derived:
 
-    - ``"pairs"`` — materialize the candidate-pair relation and run the
-      distributed star-contraction CC.  Edge shuffle is O(true pairs):
+    - ``"pairs"`` — materialize the candidate-pair relation and run
+      ``dedup.connected_components`` on it: driver union-find when the
+      edges fit ``driver_max_pairs``, else the distributed hash-min
+      loop with pointer jumping.  Edge shuffle is O(true pairs):
       on a DUP-SATURATED corpus (every doc in a k-clique) that is
       k(k-1)/2 rows per clique — the sf100 replica sweep measured ~1e9
       edges / ~50 GB of sort spill for a 2M-vector corpus whose answer
@@ -1892,50 +1896,43 @@ def semdedup(df: DataFrame, centroids,
 
     celled = tmap = None
     probe_counts = None
-    celled_cache = None
+    shared_cache = False
+    with owned() as own:
+        if (n_probe == 1 and component_backend == "cells") or (
+                n_probe == 1 and component_backend == "auto"
+                and cell_task_cap is not None):
+            src = fan_out(df).select(F.col(id_col), F.col(vec_col))
+            celled = _make_celled(src, centroids, cells, vec_col,
+                                  assign_method, vec_dim=vec_dim)
+            if component_backend == "auto":
+                # ONE assignment pass serves the routing probe AND the
+                # winning route (r15, guide §2.4 "one shared pass"): for a
+                # small corpus, persist the celled projection — with the
+                # norm the pair lane needs — BEFORE the probe materializes
+                # it, so the quantizer assignment runs once instead of once
+                # for the probe plus once per route consumer.  The handle
+                # is released as soon as the (eager) pairs route has
+                # consumed it, or immediately when routing picks the lazy
+                # in-kernel cells lane.  Same small-corpus gate as
+                # semdedup_pairs(persist_celled=None): at corpus scale the
+                # projection is the whole vector table and must not be
+                # pinned.
+                if _small_corpus(df):
+                    from pyspark.storagelevel import StorageLevel
 
-    def _release_celled():
-        nonlocal celled_cache
-        if celled_cache is not None:
-            celled_cache.unpersist()
-            celled_cache = None
-
-    if (n_probe == 1 and component_backend == "cells") or (
-            n_probe == 1 and component_backend == "auto"
-            and cell_task_cap is not None):
-        src = fan_out(df).select(F.col(id_col), F.col(vec_col))
-        celled = _make_celled(src, centroids, cells, vec_col,
-                              assign_method, vec_dim=vec_dim)
-        if component_backend == "auto":
-            # ONE assignment pass serves the routing probe AND the
-            # winning route (r15, guide §2.4 "one shared pass"): for a
-            # small corpus, persist the celled projection — with the
-            # norm the pair lane needs — BEFORE the probe materializes
-            # it, so the quantizer assignment runs once instead of once
-            # for the probe plus once per route consumer.  The handle
-            # is released as soon as the (eager) pairs route has
-            # consumed it, or immediately when routing picks the lazy
-            # in-kernel cells lane.  Same small-corpus gate as
-            # semdedup_pairs(persist_celled=None): at corpus scale the
-            # projection is the whole vector table and must not be
-            # pinned.
-            if plan_size_bytes(df) <= SMALL_CORPUS_BYTES:
-                from pyspark.storagelevel import StorageLevel
-
-                celled = celled.withColumn(
-                    "__norm", norm(F.col(vec_col))
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                celled_cache = celled
-            # ONE job serves both routing decisions, and the driver
-            # receives ONE row: total pair volume (component backend)
-            # plus the fat-cell list (collect_list drops the nulls the
-            # CASE leaves for thin cells), so a high-cardinality
-            # quantizer cannot flood the driver.  Null cells (null /
-            # dim-mismatched vectors) are excluded: they are filtered
-            # before grouping and can never pair, so counting them
-            # would let unmatchable rows drive the routing.
-            cap = cell_task_cap
-            try:
+                    celled = own.persist(
+                        celled.withColumn("__norm", norm(F.col(vec_col))),
+                        StorageLevel.MEMORY_AND_DISK)
+                    shared_cache = True
+                # ONE job serves both routing decisions, and the driver
+                # receives ONE row: total pair volume (component backend)
+                # plus the fat-cell list (collect_list drops the nulls the
+                # CASE leaves for thin cells), so a high-cardinality
+                # quantizer cannot flood the driver.  Null cells (null /
+                # dim-mismatched vectors) are excluded: they are filtered
+                # before grouping and can never pair, so counting them
+                # would let unmatchable rows drive the routing.
+                cap = cell_task_cap
                 base_cnt = (celled.filter(F.col("__cell").isNotNull())
                             .groupBy("__cell").count())
                 if cells is None and isinstance(centroids,
@@ -1970,69 +1967,63 @@ def semdedup(df: DataFrame, centroids,
                     probe_counts = int(row["pv"] or 0)
                     fat = [(r["__cell"], -(-r["count"] // cap))
                            for r in row["fat"]]
-            except BaseException:
-                _release_celled()
-                raise
-            tmap = (celled.sparkSession.createDataFrame(
-                fat, "__cell long, __t int") if fat else None)
-    use_cells = component_backend == "cells"
-    if probe_counts is not None:
-        # an explicit pair_backend="sql" pins the Python-free,
-        # oracle-exact evaluation path — auto-routing must not
-        # override it with the (half-even-rounding) kernel lane
-        use_cells = (probe_counts > _COMPONENT_PAIR_CAP
-                     and pair_backend != "sql")
+                tmap = (celled.sparkSession.createDataFrame(
+                    fat, "__cell long, __t int") if fat else None)
+        use_cells = component_backend == "cells"
+        if probe_counts is not None:
+            # an explicit pair_backend="sql" pins the Python-free,
+            # oracle-exact evaluation path — auto-routing must not
+            # override it with the (half-even-rounding) kernel lane
+            use_cells = (probe_counts > _COMPONENT_PAIR_CAP
+                         and pair_backend != "sql")
 
-    if use_cells:
-        # the kernel lane's consumers are LAZY (applyInPandas over the
-        # returned frame), so there is no deterministic point after
-        # which the cache could be released — drop it now; the lane
-        # recomputes the assignment once at materialization, exactly
-        # the pre-r15 cost
-        _release_celled()
-        rows = celled.filter(F.col("__cell").isNotNull()) \
-            .select("__cell", F.col(id_col), F.col(vec_col))
-        idt = df.schema[id_col].dataType.simpleString()
-        kernel = _cell_components_kernel(threshold, id_col, vec_col)
-        schema = f"node {idt}, comp {idt}"
-        if tmap is None and probe_counts is None \
-                and cell_task_cap is not None:
-            # explicit component_backend="cells" skipped the count
-            # probe; the fat-cell guard still applies here
-            tmap = _fat_cell_tmap(celled, cell_task_cap)
-        if tmap is None:
-            # no fat cell: one kernel group per cell is complete for
-            # that cell, so its star edges ARE final components —
-            # losers come straight out, no global CC
-            losers = rows.groupBy("__cell").applyInPandas(kernel, schema) \
-                .select(F.col("node").alias(id_col))
-        else:
-            # fat cells: salted block grid re-parallelizes the
-            # quadratic work (one join key cannot be split — r9).  The
-            # kernel contracts each block's edges to a spanning-forest
-            # star (exact: CC over a union of subgraph spanning forests
-            # equals CC over all edges, and every true pair appears in
-            # >= 1 block), so the global CC input is <= sum over cells
-            # of members x t — O(corpus), never O(pairs)
-            star = _numpy_block_frames(rows, tmap, id_col) \
-                .groupBy("__cell", "__bi", "__bj") \
-                .applyInPandas(kernel, schema)
-            comp = connected_components(
-                star.select(F.col("comp").alias("id_a"),
-                            F.col("node").alias("id_b")),
-                "id_a", "id_b", max_iter=max_iter)
-            losers = comp.filter(F.col("node") != F.col("comp")) \
-                .select(F.col("node").alias(id_col))
-        return df.join(losers, id_col, "left_anti")
+        if use_cells:
+            # the kernel lane's consumers are LAZY (applyInPandas over the
+            # returned frame), so no later point can release the shared
+            # cache — drop it now; the lane recomputes the assignment once
+            # at materialization, exactly the pre-r15 cost
+            own.release(celled)
+            rows = celled.filter(F.col("__cell").isNotNull()) \
+                .select("__cell", F.col(id_col), F.col(vec_col))
+            idt = df.schema[id_col].dataType.simpleString()
+            kernel = _cell_components_kernel(threshold, id_col, vec_col)
+            schema = f"node {idt}, comp {idt}"
+            if tmap is None and probe_counts is None \
+                    and cell_task_cap is not None:
+                # explicit component_backend="cells" skipped the count
+                # probe; the fat-cell guard still applies here
+                tmap = _fat_cell_tmap(celled, cell_task_cap)
+            if tmap is None:
+                # no fat cell: one kernel group per cell is complete for
+                # that cell, so its star edges ARE final components —
+                # losers come straight out, no global CC
+                losers = rows.groupBy("__cell").applyInPandas(kernel, schema) \
+                    .select(F.col("node").alias(id_col))
+            else:
+                # fat cells: salted block grid re-parallelizes the
+                # quadratic work (one join key cannot be split — r9).  The
+                # kernel contracts each block's edges to a spanning-forest
+                # star (exact: CC over a union of subgraph spanning forests
+                # equals CC over all edges, and every true pair appears in
+                # >= 1 block), so the global CC input is <= sum over cells
+                # of members x t — O(corpus), never O(pairs)
+                star = _numpy_block_frames(rows, tmap, id_col) \
+                    .groupBy("__cell", "__bi", "__bj") \
+                    .applyInPandas(kernel, schema)
+                comp = connected_components(
+                    star.select(F.col("comp").alias("id_a"),
+                                F.col("node").alias("id_b")),
+                    "id_a", "id_b", max_iter=max_iter)
+                losers = comp.filter(F.col("node") != F.col("comp")) \
+                    .select(F.col("node").alias(id_col))
+            return df.join(losers, id_col, "left_anti")
 
-    try:
         pairs = semdedup_pairs(df, centroids, threshold, vec_col,
                                id_col,
                                # the shared cache (when small) already
                                # holds celled+norm — a second persist of
                                # the same rows would only duplicate them
-                               persist_celled=(False
-                                               if celled_cache is not None
+                               persist_celled=(False if shared_cache
                                                else None),
                                assign_method=assign_method,
                                n_probe=n_probe,
@@ -2048,15 +2039,11 @@ def semdedup(df: DataFrame, centroids,
         # upper bound on verified pairs (cosine filtering only removes
         # rows), so CC can skip its own sizing pass when the bound
         # already fits the driver (r14: one collect instead of
-        # persist+count+collect)
+        # persist+count+collect).  CC is eager on every strategy, so it
+        # has consumed the shared cache when the block releases it.
         comp = connected_components(pairs, "id_a", "id_b",
                                     max_iter=max_iter,
                                     _edge_bound=probe_counts)
-    finally:
-        # connected_components is eager on every strategy (driver
-        # collect / checkpointed loop), so by now the pair lane has
-        # consumed the shared celled cache — release it (r15, guide §5)
-        _release_celled()
     losers = comp.filter(F.col("node") != F.col("comp")) \
         .select(F.col("node").alias(id_col))
     return df.join(losers, id_col, "left_anti")
@@ -2138,15 +2125,12 @@ def semantic_contaminated_ids(corpus: DataFrame, benchmark: DataFrame,
     # consumers below read from the cache (r14, guide §1.4/§2.4)
     from pyspark.storagelevel import StorageLevel
 
-    b_cached = b.persist(StorageLevel.MEMORY_AND_DISK)
-    n_bench = b_cached.count()
-    if n_bench <= _BENCH_COLLECT_CAP:
-        probe = b_cached.collect()
-        b_cached.unpersist()
-        b = spark.createDataFrame(probe, b.schema)
-    else:
-        b = b_cached.localCheckpoint(eager=True)
-        b_cached.unpersist()
+    with owned() as own:
+        b_cached = own.persist(b, StorageLevel.MEMORY_AND_DISK)
+        if b_cached.count() <= _BENCH_COLLECT_CAP:
+            b = spark.createDataFrame(b_cached.collect(), b.schema)
+        else:
+            b = b_cached.localCheckpoint(eager=True)
     cos = F.round(F.try_divide(dot(F.col("__vc"), F.col("__vb")),
                                F.col("__nc") * F.col("__nb")), 6)
     return (
@@ -3339,13 +3323,13 @@ def embedding_filter_new(spark, index_path: str, new_vecs: DataFrame, *,
     ).select(F.col(id_col).alias("__pid"),
              F.col(vec_col).alias("__pv"),
              F.explode("__cells").alias("cell"))
-    if admit:
-        # three actions read `probed` under admit (cells collect, the
-        # id snapshot, the append); without admit the returned lazy
-        # frame outlives any unpersist, so caching would be written
-        # once and never read (same rule as neardup_filter_new)
-        probed = probed.persist()
-    try:
+    with owned() as own:
+        if admit:
+            # three actions read `probed` under admit (cells collect,
+            # the id snapshot, the append); without admit the returned
+            # lazy frame outlives the block, so caching would be
+            # written once and never read
+            probed = own.persist(probed)
         hits = _embedding_hit_pairs(spark, index_path, meta, probed,
                                     threshold,
                                     pair_backend=pair_backend)
@@ -3379,7 +3363,4 @@ def embedding_filter_new(spark, index_path: str, new_vecs: DataFrame, *,
             ).filter(F.col("cell").isNotNull()) \
                 .write.mode("append").partitionBy("cell") \
                 .parquet(index_path)
-    finally:
-        if admit:
-            probed.unpersist()
     return out

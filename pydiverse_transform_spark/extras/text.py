@@ -650,10 +650,11 @@ def remove_repeated_segments(df: DataFrame, text_col: str = "text",
     explode once; identical results either way
     (tests/test_chunking.py::test_remove_repeated_strategies_agree).
     """
-    from .util import SMALL_CORPUS_BYTES, fan_out, plan_size_bytes
+    from ..storage import hold
+    from .util import _small_corpus, fan_out
 
     if persist_segments is None:
-        persist_segments = plan_size_bytes(df) < SMALL_CORPUS_BYTES
+        persist_segments = _small_corpus(df)
 
     segs = fan_out(df).select(
         F.col(id_col),
@@ -661,7 +662,7 @@ def remove_repeated_segments(df: DataFrame, text_col: str = "text",
         .alias("__pos", "__seg"),
     )
     if persist_segments:
-        segs = segs.persist()
+        segs = hold(segs, "remove_repeated_segments")
     hot = (
         segs.groupBy("__seg")
         .agg(F.count(F.lit(1)).alias("__c"))

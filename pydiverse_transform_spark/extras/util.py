@@ -109,6 +109,12 @@ def plan_size_bytes(df: DataFrame) -> int:
     return UNKNOWN_PLAN_SIZE if size >= UNKNOWN_PLAN_SIZE else size
 
 
+def _small_corpus(df: DataFrame) -> bool:
+    """The one small-input gate: at most ``SMALL_CORPUS_BYTES`` by the
+    plan's size estimate (stats-unknown plans are never small)."""
+    return plan_size_bytes(df) <= SMALL_CORPUS_BYTES
+
+
 def _num_token(v, is_int: bool) -> str:
     if is_int:
         return str(int(v))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import owned
+
 __all__ = [
     "read_event_stream", "tumbling_window_agg", "sliding_window_agg",
     "session_window_agg", "stateful_sessionize", "dedup_stream",
@@ -471,8 +473,8 @@ def neardup_ingest_stream(stream_docs: DataFrame, index_path: str,
     def process(batch_df, batch_id):
         # the batch is tokenized+minhashed ONCE; the persisted bucket
         # rows feed the lookup, and (admit) the index append
-        pb = _probe_buckets(meta, batch_df).persist()
-        try:
+        with owned() as own:
+            pb = own.persist(_probe_buckets(meta, batch_df))
             # exists-semantics lane (r14): a batch doc is dropped iff
             # ANY index row outside the batch itself estimates >=
             # threshold — shuffle volume is bounded by the batch's id
@@ -510,8 +512,6 @@ def neardup_ingest_stream(stream_docs: DataFrame, index_path: str,
                     # any cached listings of the old directory
                     minhash_index_maintain(spark, index_path)
                     spark.catalog.refreshByPath(index_path)
-        finally:
-            pb.unpersist()
 
     w = (stream_docs.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint))
@@ -614,15 +614,15 @@ def semantic_ingest_stream(stream_vecs: DataFrame, index_path: str,
     idx_schema = spark.read.parquet(index_path).schema
 
     def process(batch_df, batch_id):
-        probed = assign_cells_multi(
-            batch_df.select(F.col(id_col), F.col(vec_col)),
-            meta.get("_centroids_np", meta["centroids"]),
-            n_probe=n_probe, vec_col=vec_col, out_col="__cells",
-            probe_margin=margin,
-        ).select(F.col(id_col).alias("__pid"),
-                 F.col(vec_col).alias("__pv"),
-                 F.explode("__cells").alias("cell")).persist()
-        try:
+        with owned() as own:
+            probed = own.persist(assign_cells_multi(
+                batch_df.select(F.col(id_col), F.col(vec_col)),
+                meta.get("_centroids_np", meta["centroids"]),
+                n_probe=n_probe, vec_col=vec_col, out_col="__cells",
+                probe_margin=margin,
+            ).select(F.col(id_col).alias("__pid"),
+                     F.col(vec_col).alias("__pv"),
+                     F.explode("__cells").alias("cell")))
             hits = _embedding_hit_pairs(spark, index_path, meta,
                                         probed, threshold,
                                         pair_backend=pair_backend)
@@ -674,8 +674,6 @@ def semantic_ingest_stream(stream_vecs: DataFrame, index_path: str,
                     # write path — drop any cached listings/plans for
                     # the old directory contents
                     spark.catalog.refreshByPath(index_path)
-        finally:
-            probed.unpersist()
 
     w = (stream_vecs.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint))

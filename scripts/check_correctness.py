@@ -6,7 +6,9 @@ Usage: python scripts/check_correctness.py [--json OUT.json] [query_name ...]
 
 ``--json`` additionally writes a driver-shaped artifact (one row per
 query with ok/detail + the session's ANSI mode) — used to commit the
-ANSI-off evidence run (ANSI_OFF_r06.json).
+ANSI-off evidence run (ANSI_OFF_r06.json).  A malformed command line
+(an unknown flag or query name, ``--json`` without a path) exits 2 with
+a usage line before Spark starts.
 """
 
 import json
@@ -26,16 +28,35 @@ from oracle_util import compare, duckdb_con  # noqa: E402
 from tests.conftest import make_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+USAGE = "check_correctness.py [--json OUT.json] [query_name ...]"
+
+
+def _usage(msg: str) -> None:
+    print(f"usage: {USAGE}\n{msg}", file=sys.stderr)
+    sys.exit(2)
+
+
+def parse_args(args: list[str], known) -> tuple[str | None, set[str]]:
+    """(json path or None, query names to run; empty = all)."""
+    json_out, names = None, []
+    it = iter(args)
+    for a in it:
+        if a == "--json":
+            json_out = next(it, None)
+            if json_out is None or json_out.startswith("-"):
+                _usage("--json needs an output path")
+        elif a.startswith("-"):
+            _usage(f"unknown flag: {a}")
+        else:
+            names.append(a)
+    unknown = [n for n in names if n not in known]
+    if unknown:
+        _usage(f"unknown queries: {' '.join(unknown)}")
+    return json_out, set(names)
 
 
 def main():
-    args = sys.argv[1:]
-    json_out = None
-    if "--json" in args:
-        i = args.index("--json")
-        json_out = args[i + 1]
-        args = args[:i] + args[i + 2:]
-    only = set(args)
+    json_out, only = parse_args(sys.argv[1:], entry_mod.queries())
     spark = make_spark("check-correctness")
     # SPARK_GRAFT_ANSI=false mirrors tests/conftest.py: prove the whole
     # registry is spark.sql.ansi.enabled-independent (unset = Spark 4

@@ -114,3 +114,13 @@ ALL = {
     "df_strings": DF_STRINGS, "df_datetime": DF_DATETIME,
     "df_num": DF_NUM, "df_int": DF_INT, "df_bool": DF_BOOL,
 }
+
+
+def persistent_rdd_ids(spark) -> set:
+    """Ids of every RDD the SparkContext holds persisted: cached
+    relations and local checkpoints alike."""
+    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids

@@ -138,4 +138,4 @@ def test_gram_cache_kept_when_plan_probe_raises(spark):
     try:
         assert cached(g2), "gram cache dropped on a failed plan probe"
     finally:
-        cl._lm_release_gram_cache(g2)
+        g2.unpersist()

@@ -19,6 +19,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from fixtures import persistent_rdd_ids
+
 from pydiverse_transform_spark.extras import dedup
 
 SF = "/root/testdata/sf0.001"
@@ -137,53 +139,48 @@ def test_filter_new_still_admits_and_filters(spark, saturated_index,
     assert not ({i for i in again_ids} & surv_ids)
 
 
-def _persistent_rdd_ids(spark) -> set:
-    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
 def test_scoped_lookup_releases_probe_cache(spark, saturated_index):
     """Long-session lifecycle (r13 verdict item 5): N default-lane
-    lookups through the scoped API leave storage memory at baseline;
+    lookups inside ``pdt.scope()`` leave storage memory at baseline;
     results match the plain function.
 
     The probe carries a test-unique (no-op) filter literal so its
     bucket plan cannot alias a relation some earlier suite test
     already cached: Spark's CacheManager dedupes identical plans, and
-    the auto lane's documented LRU-lifetime persists mean a full-suite
-    run CAN legitimately arrive here with an identical probe-bucket
-    entry alive — then ``persist()`` adds nothing and a global COUNT
-    assertion goes red on suite order alone (seen in the r14 full
-    run).  Identity (RDD-id set difference) is what the contract is
-    about: the entries this block creates are gone when it exits."""
+    an unscoped lookup keeps its cache until the next lookup on a
+    different probe — a full-suite run CAN legitimately arrive here
+    with an identical probe-bucket entry alive, and then ``persist()``
+    adds nothing.  Identity (RDD-id set difference) is what the
+    contract is about: the entries the scope creates are gone when it
+    exits."""
+    import pydiverse_transform_spark as pdt
+
     base, probe = saturated_index
     probe = probe.filter(F.col("doc_id") != F.lit(-987_654_321))
-    baseline = _persistent_rdd_ids(spark)
+    baseline = persistent_rdd_ids(spark)
     want = sorted(
         (r["probe_id"], r["index_id"]) for r in
         dedup.minhash_index_lookup(spark, base, probe, threshold=0.45,
                                    governors="off").collect())
     for _ in range(3):
-        with dedup.minhash_index_lookup_scoped(
-                spark, base, probe, threshold=0.45) as pairs:
+        with pdt.scope():
+            pairs = dedup.minhash_index_lookup(spark, base, probe,
+                                               threshold=0.45)
             got = sorted((r["probe_id"], r["index_id"])
                          for r in pairs.collect())
             assert got == want
-            # inside the block the probe bucket relation is cached
-            created = _persistent_rdd_ids(spark) - baseline
+            # inside the scope the probe bucket relation is cached
+            created = persistent_rdd_ids(spark) - baseline
             assert created
-        # ... and every entry the block created is released on exit
-        assert not (_persistent_rdd_ids(spark) & created)
-    # the result stays usable (uncached recompute) after the block
-    with dedup.minhash_index_lookup_scoped(
-            spark, base, probe, threshold=0.45) as pairs:
-        pass
+        # ... and every entry the scope created is released on exit
+        assert not (persistent_rdd_ids(spark) & created)
+    # the result stays usable (uncached recompute) after the scope
+    with pdt.scope():
+        pairs = dedup.minhash_index_lookup(spark, base, probe,
+                                           threshold=0.45)
     assert sorted((r["probe_id"], r["index_id"])
                   for r in pairs.collect()) == want
-    assert not (_persistent_rdd_ids(spark) & created)
+    assert not (persistent_rdd_ids(spark) & created)
 
 
 def test_spansort_spread_nonnumeric_conf_noop(monkeypatch):

@@ -8,6 +8,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from fixtures import persistent_rdd_ids
+
 from pydiverse_transform_spark.extras.dedup import connected_components
 from pydiverse_transform_spark.extras.util import lit_num_array
 
@@ -124,14 +126,6 @@ def test_sql_text_mirrors_match_column_forms(spark):
     assert a.collect() == b.collect()
 
 
-def _persistent_rdd_ids(spark):
-    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
 def test_schema_memoized_read_matches_and_invalidates(spark, tmp_path):
     """spark_read_parquet must return frames identical to plain reads,
     reuse the inferred schema on a second read, and re-infer after the
@@ -169,14 +163,14 @@ def test_cc_edge_bound_skips_probe_identically(spark):
     edges = [(i, i + 1) for i in range(1, 10)] + [(20, 21)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     want = {r.node: r.comp for r in connected_components(pairs).collect()}
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     rounds = []
     got = {r.node: r.comp
            for r in connected_components(
                pairs, _edge_bound=len(edges),
                _rounds_out=rounds).collect()}
     assert got == want and rounds == [0]
-    assert _persistent_rdd_ids(spark) - before == set()
+    assert persistent_rdd_ids(spark) - before == set()
     # a bound ABOVE the cap must fall back to the probed route
     got = {r.node: r.comp
            for r in connected_components(
@@ -192,19 +186,19 @@ def test_cc_probe_unpersists_both_routes(spark):
     want = {i: 1 for i in range(1, 11)}
     want.update({20: 20, 21: 20})
 
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     got = {r.node: r.comp
            for r in connected_components(pairs).collect()}
     assert got == want
-    assert _persistent_rdd_ids(spark) - before == set()
+    assert persistent_rdd_ids(spark) - before == set()
 
     # distributed route: force it by shrinking the driver cap.  Only
     # the RETURNED frame's backing checkpoint may remain — the probe
     # cache, the edge cache and every superseded round's checkpoint
     # must be gone (r14 per-round release).
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     got = {r.node: r.comp
            for r in connected_components(
                pairs, driver_max_pairs=3).collect()}
     assert got == want
-    assert len(_persistent_rdd_ids(spark) - before) <= 1
+    assert len(persistent_rdd_ids(spark) - before) <= 1

@@ -42,3 +42,23 @@ def test_capture_plans_rejects_bad_argv(args):
     assert proc.stderr.startswith("usage: ")
     assert "Traceback" not in proc.stderr
     assert "Spark" not in proc.stderr + proc.stdout
+
+
+CORRECTNESS = os.path.join(os.path.dirname(SPOT), "check_correctness.py")
+
+
+@pytest.mark.parametrize("args", [
+    ["q_no_such_query"], ["q01_pricing_summary", "q_no_such_query"],
+    ["--json"], ["q01_pricing_summary", "--json"],
+    ["--json", "--bogus"], ["--bogus"],
+])
+def test_check_correctness_rejects_bad_argv(args):
+    """A typo'd query name must not pass the gate as "0 ok, 0 failed",
+    and a trailing --json must not raise IndexError: exit 2 with a
+    usage line before Spark starts."""
+    proc = subprocess.run([sys.executable, CORRECTNESS, *args],
+                          capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 2
+    assert proc.stderr.startswith("usage: ")
+    assert "Traceback" not in proc.stderr
+    assert "Spark" not in proc.stderr + proc.stdout
