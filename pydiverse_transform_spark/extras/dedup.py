@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..storage import hold, owned
+from ..storage import hold, owned, scope
 from .util import _small_corpus, fan_out, render
 
 __all__ = [
@@ -809,10 +809,13 @@ def neardup_dedup(df: DataFrame, text_col: str = "text",
     canonical (minimum-id) document of every duplicate cluster.  The
     anti-join against the (tiny) non-canonical id set is broadcast by
     Catalyst, so the full corpus is read exactly once."""
-    pairs = minhash_dedup_pairs(df, text_col, id_col, k=k,
-                                n_hashes=n_hashes, bands=bands,
-                                threshold=threshold)
-    cc = connected_components(pairs, max_iter=max_iter)
+    # CC is eager and returns driver rows or checkpointed labels: it is
+    # the last reader of the caches minhash_dedup_pairs holds
+    with scope():
+        pairs = minhash_dedup_pairs(df, text_col, id_col, k=k,
+                                    n_hashes=n_hashes, bands=bands,
+                                    threshold=threshold)
+        cc = connected_components(pairs, max_iter=max_iter)
     dupes = (
         cc.filter(F.col("node") != F.col("comp"))
         .select(F.col("node").alias(id_col))

@@ -22,7 +22,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..storage import hold, owned
+from ..storage import hold, owned, scope
 from .util import _small_corpus, render
 
 _log = logging.getLogger(__name__)
@@ -66,6 +66,35 @@ def cosine(a: Column, b: Column) -> Column:
     # ANSI modes (bare `/` raises DIVIDE_BY_ZERO under the Spark 4 ANSI
     # default; the DuckDB oracle yields NULL).
     return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+def _cosine_verified(pairs: DataFrame, keep: list, threshold: float,
+                     cols=("va", "vb", "na", "nb"),
+                     out: str = "cos_sim") -> DataFrame:
+    """The sql lane's one thresholded-cosine definition: ``keep`` plus
+    ``out`` = round(cosine, 6) of each candidate pair, from the two
+    vectors and their per-row norms named in ``cols``, filtered to
+    ``out >= threshold``.
+
+    Norms are columns computed once per row before the join, so no
+    candidate pair re-traverses its vectors for them.
+    The cosine is projected FIRST and the filter reads the projected
+    column: filtering the raw lambda expression lets constraint
+    inference synthesize a predicate over one join side's attributes
+    and push it to the other side — runtime
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (r9, pinned in
+    tests/test_r9_fixes.py).  A NaN cosine (NaN component) never
+    matches: Spark orders NaN as LARGEST, so a bare ``>= threshold``
+    would pass it.  A zero vector's cosine is NULL and fails too.
+    Spark's round is half-up, so this lane is the oracle-exact form."""
+    va, vb, na, nb = cols
+    return (
+        pairs.select(
+            *keep,
+            F.round(F.try_divide(dot(F.col(va), F.col(vb)),
+                                 F.col(na) * F.col(nb)), 6).alias(out))
+        .filter(~F.isnan(out) & (F.col(out) >= threshold))
+    )
 
 
 def _qlit(query_vec: list[float]) -> Column:
@@ -195,9 +224,6 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     cells — raise n_planes to shrink cells), and only candidate pairs pay
     the exact-cosine cost."""
     planes = hyperplanes(_require_dim(dim, vec_col), n_planes)
-    # norms are computed ONCE per row before the join — computing
-    # cosine() per pair would re-traverse both arrays for the norms,
-    # tripling the per-candidate cost
     from .util import fan_out
 
     bucketed = fan_out(df).select(
@@ -213,22 +239,10 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
         F.col("__bucket"), F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"), F.col("__norm").alias("nb"),
     )
-    return (
+    return _cosine_verified(
         a.join(b, on="__bucket", how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.try_divide(
-                    dot(F.col("va"), F.col("vb")),
-                    F.col("na") * F.col("nb"),
-                ), 6
-            ).alias("cos_sim"),
-        )
-        # NaN cosines are unmatchable, and Spark's NaN-is-largest
-        # predicate semantics would otherwise pass them (r9)
-        .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
-    )
+        .filter(F.col("id_a") < F.col("id_b")),
+        ["id_a", "id_b"], threshold)
 
 
 def ivf_centroids(dim: int, n_cells: int, seed: str = "ivf"
@@ -1191,167 +1205,178 @@ def pq_fit(df: DataFrame, m: int = 8, k: int = 16, n_iter: int = 5,
     return books
 
 
+def _tmap(spark, counts, cap: int):
+    """(__cell, __t) literal frame of the cells in ``counts`` ((cell,
+    member count) rows, collected to the driver) holding more than
+    ``cap`` members, with block factor t = ceil(count / cap); None
+    when no cell is fat."""
+    fat = [(cell, -(-n // cap)) for cell, n in counts if n > cap]
+    return (spark.createDataFrame(fat, "__cell long, __t int")
+            if fat else None)
+
+
 def _fat_cell_tmap(celled: DataFrame, cap: int):
-    """(cell -> t) DataFrame for cells whose member count exceeds
-    ``cap`` (t = ceil(count / cap)), or None when no cell is fat.
-    One map-side-combined count aggregate, COLLECTED once (at most k
-    rows) and rebuilt as a literal frame — leaving it lazy would
-    re-run the full celled aggregation for every downstream
-    evaluation (the probe check plus each broadcast exchange), which
-    at corpus scale with persist_celled=False is one extra corpus
-    pass apiece."""
+    """:func:`_tmap` of ``celled``.  One map-side-combined count
+    aggregate, COLLECTED once (at most k rows) and rebuilt as a
+    literal frame — leaving it lazy would re-run the full celled
+    aggregation for every downstream evaluation (the probe check plus
+    each broadcast exchange), which at corpus scale with
+    persist_celled=False is one extra corpus pass apiece."""
     rows = (celled.groupBy("__cell").count()
-            .filter(F.col("count") > cap)
-            .select("__cell",
-                    F.ceil(F.col("count") / cap).cast("int")
-                    .alias("__t"))
-            .collect())
-    if not rows:
-        return None
-    return celled.sparkSession.createDataFrame(
-        [(r["__cell"], r["__t"]) for r in rows],
-        "__cell long, __t int")
+            .filter(F.col("count") > cap).collect())
+    return _tmap(celled.sparkSession,
+                 [(r["__cell"], r["count"]) for r in rows], cap)
+
+
+def _salted(rows: DataFrame, tmap: DataFrame, id_col: str, side: int,
+            symmetric: bool = True) -> DataFrame:
+    """``rows`` exploded into the salted blocks (``__bi``, ``__bj``) of
+    their cell: a member of a cell with block factor t (from ``tmap``;
+    1 elsewhere) gets salt s = xxhash64(id) mod t; on side 0 (A) it
+    joins blocks (s, j), on side 1 (B) blocks (i, s) — for j >= s and
+    i <= s when ``symmetric`` (the triangle), for every j or i
+    otherwise (the full grid)."""
+    t = rows.join(F.broadcast(tmap), on="__cell", how="left") \
+        .withColumn("__t", F.coalesce(F.col("__t"), F.lit(1)))
+    salt = F.pmod(F.xxhash64(F.col(id_col)), F.col("__t")).cast("int")
+    if side == 0:
+        own, other = "__bi", "__bj"
+        span = F.sequence(F.col("__bi") if symmetric else F.lit(0),
+                          F.col("__t") - 1)
+    else:
+        own, other = "__bj", "__bi"
+        span = F.sequence(F.lit(0), F.col("__bj") if symmetric
+                          else F.col("__t") - 1)
+    return t.withColumn(own, salt) \
+        .withColumn(other, F.explode(span)).drop("__t")
 
 
 def _blocked_pair_join(a: DataFrame, b: DataFrame, tmap: DataFrame,
                        symmetric: bool) -> DataFrame:
     """Self/semi-self equi-join on ``__cell`` with PER-KEY parallelism:
-    members of a cell with block factor t (from ``tmap``; 1 elsewhere)
-    are salted by id-hash into t buckets and the cell's pair space is
-    decomposed into a t x t block grid — each block is its own join
-    key, so one fat cell's quadratic pair work spreads over ~t²/2
-    TASKS instead of serializing into one (a single join key is the
-    one skew shape AQE's skew-join split cannot touch).  EXACT: every
-    candidate pair lands in exactly one block.
+    members of a fat cell are salted into t buckets (:func:`_salted`)
+    and the cell's pair space is decomposed into a t x t block grid —
+    each block is its own join key, so one fat cell's quadratic pair
+    work spreads over ~t²/2 TASKS instead of serializing into one (a
+    single join key is the one skew shape AQE's skew-join split cannot
+    touch).  EXACT: every candidate pair lands in exactly one block.
 
     ``symmetric=True`` (a == b up to column naming, caller keeps pairs
-    with id_a < id_b): triangle decomposition — A-side row with salt s
-    joins blocks (s, j >= s), B-side row with salt s joins blocks
-    (i <= s, s); an unordered pair with salts (p, q), p != q, meets
-    exactly once in block (min, max) with the lower-salt row on the A
-    side, and diagonal blocks fall back to the caller's id order.  The
-    caller must therefore accept off-diagonal pairs in EITHER id order
-    (filter ``(__bi < __bj) | (id_a < id_b)`` and canonicalize with
-    least/greatest).  ``symmetric=False`` (A is a subset lane, e.g.
-    multi-probe home members): full-grid decomposition, every (A, B)
-    combination meets exactly once.
+    with id_a < id_b): triangle decomposition — an unordered pair with
+    salts (p, q), p != q, meets exactly once in block (min, max) with
+    the lower-salt row on the A side, and diagonal blocks fall back to
+    the caller's id order.  The caller must therefore accept
+    off-diagonal pairs in EITHER id order (filter ``(__bi < __bj) |
+    (id_a < id_b)`` and canonicalize with least/greatest).
+    ``symmetric=False`` (A is a subset lane, e.g. multi-probe home
+    members): full-grid decomposition, every (A, B) combination meets
+    exactly once.
 
     Data inflation is confined to fat cells: ~t/2 x (triangle) or
     t x (grid) on each side — O(n_cell²/cap) extra shuffled rows, the
     price of turning one 10⁹-pair task into 10³ bounded ones."""
-    one = F.lit(1)
-    ta = a.join(F.broadcast(tmap), on="__cell", how="left") \
-        .withColumn("__t", F.coalesce(F.col("__t"), one))
-    tb = b.join(F.broadcast(tmap), on="__cell", how="left") \
-        .withColumn("__t", F.coalesce(F.col("__t"), one))
-    sa = F.pmod(F.xxhash64(F.col("id_a")), F.col("__t")).cast("int")
-    sb = F.pmod(F.xxhash64(F.col("id_b")), F.col("__t")).cast("int")
-    a_blocks = (
-        ta.withColumn("__bi", sa)
-        .withColumn("__bj", F.explode(F.sequence(
-            F.col("__bi") if symmetric else F.lit(0),
-            F.col("__t") - 1)))
-        .drop("__t")
-    )
-    b_blocks = (
-        tb.withColumn("__bj", sb)
-        .withColumn("__bi", F.explode(F.sequence(
-            F.lit(0),
-            F.col("__bj") if symmetric else F.col("__t") - 1)))
-        .drop("__t")
-    )
-    return a_blocks.join(b_blocks, on=["__cell", "__bi", "__bj"],
-                         how="inner")
+    return _salted(a, tmap, "id_a", 0, symmetric).join(
+        _salted(b, tmap, "id_b", 1, symmetric),
+        on=["__cell", "__bi", "__bj"], how="inner")
+
+
+# rows per slab on EACH axis of the thresholded-cosine matmul: a slab
+# is at most 2048 x 2048 float64 (32 MB) whatever the group size
+_SLAB = 2048
+
+
+def _cosine_slabs(va, vb, threshold: float, row_block: int = _SLAB,
+                  col_block: int = _SLAB):
+    """The numpy lane's one thresholded-cosine definition.  Yields
+    ``(s, c, hit, cos)`` per slab over rows ``s..`` of ``va`` and
+    columns ``c..`` of ``vb`` (sequences of equal-length vectors):
+    ``cos`` is ``round(cosine, 6)`` and ``hit`` its ``cos >=
+    threshold`` mask.  ``vb=None`` covers only the strict upper
+    triangle of ``va x va`` (row < column), for pairs within one group.
+
+    One BLAS matmul per slab instead of one interpreted Catalyst
+    ArrayAggregate per PAIR, blocked on both axes so peak memory is
+    ``row_block x col_block`` floats for any group size.  A NaN
+    cosine (NaN component) compares False and a zero vector's cosine
+    is NaN, so neither ever hits: the same unmatchable contract the
+    sql lane spells as ``~isnan``.  Rounding caveat: np.round is
+    half-even while Spark's round is half-up, so a cosine landing
+    EXACTLY on a 5e-7 boundary can differ from the sql lane (the
+    parity tests pin agreement on real data)."""
+    import numpy as np
+
+    if len(va) == 0 or (vb is not None and len(vb) == 0):
+        return
+    xa = np.vstack([np.asarray(v, dtype=np.float64) for v in va])
+    xb = xa if vb is None else np.vstack(
+        [np.asarray(v, dtype=np.float64) for v in vb])
+    na = np.sqrt((xa * xa).sum(axis=1))
+    nb = np.sqrt((xb * xb).sum(axis=1))
+    for s in range(0, len(xa), row_block):
+        e = min(s + row_block, len(xa))
+        for c in range(0, len(xb), col_block):
+            ce = min(c + col_block, len(xb))
+            if vb is None and ce - 1 <= s:
+                continue                    # on or below the diagonal
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.round((xa[s:e] @ xb[c:ce].T)
+                               / np.outer(na[s:e], nb[c:ce]), 6)
+            hit = cos >= threshold
+            if vb is None and c < e:        # slab crosses the diagonal
+                hit = np.triu(hit, s - c + 1)
+            yield s, c, hit, cos
 
 
 def _pairs_numpy_kernel(threshold: float, id_col: str, vec_col: str,
-                        row_block: int = 2048):
-    """applyInPandas kernel emitting (id_a, id_b, cos_sim) pairs with
-    rounded cosine >= threshold inside one cell / one salted block.
-    One BLAS matmul per ``row_block`` rows instead of one interpreted
-    Catalyst ArrayAggregate per PAIR — measured ~1000x on fat cells
-    (the sf10 33k-member cell: 5.6e8 pairs = ~37 min interpreted, ~5 s
-    here).  The sim matrix is blocked so peak memory is
-    row_block x n_group floats, never n².
+                        block: int = _SLAB):
+    """applyInPandas kernel emitting canonical (id_a, id_b, cos_sim)
+    pairs with rounded cosine >= threshold inside one cell / one
+    salted block, from :func:`_cosine_slabs` — measured ~1000x over
+    the sql lane on fat cells (the sf10 33k-member cell: 5.6e8 pairs
+    = ~37 min interpreted, ~5 s here).
 
     Group frames carry a ``__side`` flag when they come from the
-    salted block grid: diagonal blocks (bi == bj) hold the same rows
-    on both sides and reduce to the triangle case; off-diagonal blocks
-    compute the A x B cross product and canonicalize ids (cosine is
-    symmetric).  Rounding note: np.round is half-even while Spark's
-    round is half-up — a pair whose cosine lands EXACTLY on a 5e-7
-    boundary can differ between backends; the parity test pins
-    agreement on real data."""
+    salted block grid: diagonal blocks (bi == bj) hold each row once
+    and reduce to the triangle case; off-diagonal blocks compute the
+    A x B cross product and canonicalize ids (cosine is symmetric)."""
     import numpy as np
     import pandas as pd
-
-    def _stack(frame):
-        ids = frame[id_col].to_numpy()
-        X = np.vstack([np.asarray(v, dtype=np.float64)
-                       for v in frame[vec_col]])
-        n = np.sqrt((X * X).sum(axis=1))
-        return ids, X, n
-
-    def _emit(ia, ib, cs):
-        return pd.DataFrame({"id_a": np.minimum(ia, ib),
-                             "id_b": np.maximum(ia, ib),
-                             "cos_sim": cs})
 
     empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
 
     def fn(pdf):
-        if len(pdf) == 0:
-            return empty
-        cross = ("__side" in pdf.columns
-                 and pdf["__bi"].iat[0] != pdf["__bj"].iat[0])
+        if "__side" in pdf.columns and len(pdf) \
+                and pdf["__bi"].iat[0] != pdf["__bj"].iat[0]:
+            a = pdf[pdf["__side"] == 0]
+            b = pdf[pdf["__side"] == 1]
+            vb, ib = b[vec_col], b[id_col].to_numpy()
+        else:
+            # sort by id so the positional upper triangle IS the
+            # id_a < id_b contract
+            a = pdf.sort_values(id_col)
+            vb, ib = None, a[id_col].to_numpy()
+        ia = a[id_col].to_numpy()
         out = []
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if cross:
-                a = pdf[pdf["__side"] == 0]
-                b = pdf[pdf["__side"] == 1]
-                if len(a) == 0 or len(b) == 0:
-                    return empty
-                ia, Xa, na = _stack(a)
-                ib, Xb, nb = _stack(b)
-                for s in range(0, len(ia), row_block):
-                    e = min(s + row_block, len(ia))
-                    sims = np.round(
-                        (Xa[s:e] @ Xb.T) / np.outer(na[s:e], nb), 6)
-                    r, c = np.nonzero(sims >= threshold)
-                    if len(r):
-                        out.append(_emit(ia[s:e][r], ib[c],
-                                         sims[r, c]))
-            else:
-                rows = (pdf[pdf["__side"] == 0]
-                        if "__side" in pdf.columns else pdf)
-                if len(rows) < 2:
-                    return empty
-                # sort by id so the positional upper triangle IS the
-                # id_a < id_b contract
-                rows = rows.sort_values(id_col)
-                ids, X, nrm = _stack(rows)
-                for s in range(0, len(ids), row_block):
-                    e = min(s + row_block, len(ids))
-                    sims = np.round(
-                        (X[s:e] @ X.T) / np.outer(nrm[s:e], nrm), 6)
-                    r, c = np.nonzero(sims >= threshold)
-                    keep = c > (r + s)          # strict upper triangle
-                    r, c = r[keep], c[keep]
-                    if len(r):
-                        out.append(_emit(ids[s:e][r], ids[c],
-                                         sims[r, c]))
+        for s, c, hit, cos in _cosine_slabs(a[vec_col], vb, threshold,
+                                            block, block):
+            r, k = np.nonzero(hit)
+            if len(r):
+                out.append(pd.DataFrame({
+                    "id_a": np.minimum(ia[s + r], ib[c + k]),
+                    "id_b": np.maximum(ia[s + r], ib[c + k]),
+                    "cos_sim": cos[r, k]}))
         return pd.concat(out) if out else empty
 
     return fn
 
 
 def _cell_components_kernel(threshold: float, id_col: str, vec_col: str,
-                            row_block: int = 2048, max_rounds: int = 64):
+                            block: int = _SLAB, max_rounds: int = 64):
     """applyInPandas kernel computing the connected components of ONE
-    cell's near-duplicate graph (edges = pairs with rounded cosine >=
-    threshold) entirely inside the Arrow batch, emitting only the
-    LOSERS — (node, comp) rows where node is not its component's
-    minimum id.
+    cell's near-duplicate graph (edges = the hits of
+    :func:`_cosine_slabs`) entirely inside the Arrow batch, emitting
+    only the LOSERS — (node, comp) rows where node is not its
+    component's minimum id.
 
     Scale rationale (r10, found by the sf100 three-decade sweep): on a
     dup-saturated corpus every k-member near-dup clique contributes
@@ -1360,19 +1385,13 @@ def _cell_components_kernel(threshold: float, id_col: str, vec_col: str,
     sf100 — even though the ANSWER (one loser row per duplicate) is
     corpus-sized.  With ``n_probe == 1`` every edge is within a single
     quantizer cell, so components are provably cell-local and the edge
-    set never needs to exist outside this kernel: cosines come from the
-    same blocked BLAS matmuls as :func:`_pairs_numpy_kernel` (peak
-    memory row_block x n, never n²), and connectivity is solved by
-    min-label propagation — per row-slab, rows and their hit columns
-    exchange labels (all vectorized), then pointer jumping
+    set never needs to exist outside this kernel.  Connectivity is
+    solved by min-label propagation — per slab, rows and their hit
+    columns exchange labels (all vectorized), then pointer jumping
     (``lab = lab[lab]``) doubles label paths for log-depth convergence
     on chains.  Labels only decrease and are bounded, so the fixpoint
     (no change across a full sweep) is exact: at fixpoint every edge's
-    endpoints carry equal labels, and the label is the component min.
-
-    Rounding matches the numpy pair backend (np.round half-even; the
-    sql backend's Spark round is half-up — same 5e-7-boundary caveat
-    as ``pair_backend`` documents)."""
+    endpoints carry equal labels, and the label is the component min."""
     import numpy as np
     import pandas as pd
 
@@ -1384,53 +1403,46 @@ def _cell_components_kernel(threshold: float, id_col: str, vec_col: str,
             return empty
         rows = pdf.sort_values(id_col)   # index order == id order
         ids = rows[id_col].to_numpy()
-        X = np.vstack([np.asarray(v, dtype=np.float64)
-                       for v in rows[vec_col]])
-        nrm = np.sqrt((X * X).sum(axis=1))
         lab = np.arange(n, dtype=np.int64)
         sentinel = np.int64(n)           # > every real label
-        # the hit matrix is similarity-threshold-fixed, only the labels
-        # change across sweeps: cache the per-slab boolean H (n² bits as
-        # bool bytes — 4 MB at the 2048 cap) so every sweep after the
-        # first costs label propagation only, not a full BLAS pass.
-        # Groups beyond the cache budget (cells-lane with the cap
-        # disabled) fall back to recomputing per sweep.
+        # the hit slabs are threshold-fixed, only the labels change
+        # across sweeps: cache the slabs holding a hit (at most n²
+        # bools — 4 MB at the 2048 cap) so every sweep after the first
+        # costs label propagation only, not a full BLAS pass.  Groups
+        # beyond the cache budget (cells lane with the cap disabled)
+        # recompute per sweep.
         cache = [] if n * n <= (64 << 20) else None
-        with np.errstate(divide="ignore", invalid="ignore"):
-            converged = False
-            for rnd in range(max_rounds):
-                prev = lab.copy()
-                for bi, s in enumerate(range(0, n, row_block)):
-                    e = min(s + row_block, n)
-                    if cache is not None and rnd > 0:
-                        H = cache[bi]
-                    else:
-                        sims = np.round(
-                            (X[s:e] @ X.T) / np.outer(nrm[s:e], nrm), 6)
-                        H = sims >= threshold   # NaN compares False;
-                        # diagonal self-hits are harmless self-edges
-                        if cache is not None:
-                            cache.append(H)
-                    cl = np.where(H, lab[None, :], sentinel).min(axis=1)
-                    rmin = np.minimum(lab[s:e], cl)
-                    lab[s:e] = rmin
-                    colmin = np.where(H, rmin[:, None], sentinel) \
-                        .min(axis=0)
-                    np.minimum(lab, colmin, out=lab)
-                while True:              # pointer jumping
-                    nl = lab[lab]
-                    if np.array_equal(nl, lab):
-                        break
-                    lab = nl
-                if np.array_equal(lab, prev):
-                    converged = True
+        converged = False
+        for rnd in range(max_rounds):
+            prev = lab.copy()
+            slabs = cache if cache is not None and rnd else (
+                (s, c, hit) for s, c, hit, _ in _cosine_slabs(
+                    rows[vec_col], None, threshold, block, block)
+                if hit.any())
+            for s, c, hit in slabs:
+                if cache is not None and not rnd:
+                    cache.append((s, c, hit))
+                e, ce = s + hit.shape[0], c + hit.shape[1]
+                rmin = np.minimum(lab[s:e], np.where(
+                    hit, lab[None, c:ce], sentinel).min(axis=1))
+                lab[s:e] = rmin
+                np.minimum(lab[c:ce], np.where(
+                    hit, rmin[:, None], sentinel).min(axis=0),
+                    out=lab[c:ce])
+            while True:                  # pointer jumping
+                nl = lab[lab]
+                if np.array_equal(nl, lab):
                     break
-            if not converged:
-                raise RuntimeError(
-                    f"cell component labels did not converge in "
-                    f"{max_rounds} sweeps over {n} members — raise "
-                    f"max_rounds (propagation + pointer jumping needs "
-                    f"O(log n) sweeps, so this indicates a bug)")
+                lab = nl
+            if np.array_equal(lab, prev):
+                converged = True
+                break
+        if not converged:
+            raise RuntimeError(
+                f"cell component labels did not converge in "
+                f"{max_rounds} sweeps over {n} members — raise "
+                f"max_rounds (propagation + pointer jumping needs "
+                f"O(log n) sweeps, so this indicates a bug)")
         keep = lab != np.arange(n)
         if not keep.any():
             return empty
@@ -1441,27 +1453,16 @@ def _cell_components_kernel(threshold: float, id_col: str, vec_col: str,
 
 def _numpy_block_frames(rows: DataFrame, tmap: DataFrame,
                         id_col: str) -> DataFrame:
-    """Row-level twin of :func:`_blocked_pair_join` for the numpy pair
-    backend: every member row is exploded into its triangle-block
+    """The triangle blocks of :func:`_blocked_pair_join` as ROWS for
+    the Arrow kernels: every member row in each of its block
     memberships with a ``__side`` flag (0 = A occurrences, 1 = B), so
     one ``groupBy(cell, bi, bj)`` group carries exactly the rows of
     one block."""
-    one = F.lit(1)
-    t = rows.join(F.broadcast(tmap), on="__cell", how="left") \
-        .withColumn("__t", F.coalesce(F.col("__t"), one))
-    s = F.pmod(F.xxhash64(F.col(id_col)), F.col("__t")).cast("int")
-    a = (t.withColumn("__bi", s)
-         .withColumn("__bj", F.explode(
-             F.sequence(F.col("__bi"), F.col("__t") - 1)))
-         .withColumn("__side", F.lit(0)).drop("__t"))
-    b = (t.withColumn("__bj", s)
-         .withColumn("__bi", F.explode(
-             F.sequence(F.lit(0), F.col("__bj"))))
-         .withColumn("__side", F.lit(1)).drop("__t"))
+    a = _salted(rows, tmap, id_col, 0).withColumn("__side", F.lit(0))
+    b = _salted(rows, tmap, id_col, 1).withColumn("__side", F.lit(1))
     # diagonal blocks hold identical row sets on both sides; keep only
     # the A occurrence there (the kernel triangles it)
-    return a.unionByName(
-        b.filter(F.col("__bi") != F.col("__bj")))
+    return a.unionByName(b.filter(F.col("__bi") != F.col("__bj")))
 
 
 # "caller did not hand anything down" marker for semdedup()'s private
@@ -1714,24 +1715,7 @@ def semdedup_pairs(df: DataFrame, centroids,
                     "va", "vb", "na", "nb",
                 )
             )
-    return (
-        cands.select(
-            "id_a", "id_b",
-            F.round(
-                F.try_divide(
-                    dot(F.col("va"), F.col("vb")),
-                    F.col("na") * F.col("nb"),
-                ), 6
-            ).alias("cos_sim"),
-        )
-        # NaN guard: Spark's ordering treats NaN as LARGEST, so a bare
-        # >= threshold would EMIT pairs of NaN-component vectors (and
-        # the numpy backend would not — np comparisons are False on
-        # NaN).  A NaN cosine is unmatchable, same contract as the
-        # ingest admit lanes; both backends now agree (pinned in
-        # tests/test_r9_fixes.py)
-        .filter(~F.isnan("cos_sim") & (F.col("cos_sim") >= threshold))
-    )
+    return _cosine_verified(cands, ["id_a", "id_b"], threshold)
 
 
 def _make_celled(src: DataFrame, centroids, cells: Column | None,
@@ -1952,8 +1936,6 @@ def semdedup(df: DataFrame, centroids,
                             for r in base_cnt.collect()]
                     probe_counts = sum(c * (c - 1) // 2
                                        for _, c in cnts)
-                    fat = [(cell, -(-c // cap))
-                           for cell, c in cnts if c > cap]
                 else:
                     row = (base_cnt
                            .agg(F.sum(F.expr("count * (count - 1) / 2"))
@@ -1965,10 +1947,9 @@ def semdedup(df: DataFrame, centroids,
                                 .alias("fat"))
                            .collect()[0])
                     probe_counts = int(row["pv"] or 0)
-                    fat = [(r["__cell"], -(-r["count"] // cap))
-                           for r in row["fat"]]
-                tmap = (celled.sparkSession.createDataFrame(
-                    fat, "__cell long, __t int") if fat else None)
+                    cnts = [(r["__cell"], r["count"])
+                            for r in row["fat"]]
+                tmap = _tmap(celled.sparkSession, cnts, cap)
         use_cells = component_backend == "cells"
         if probe_counts is not None:
             # an explicit pair_backend="sql" pins the Python-free,
@@ -2018,32 +1999,36 @@ def semdedup(df: DataFrame, centroids,
                     .select(F.col("node").alias(id_col))
             return df.join(losers, id_col, "left_anti")
 
-        pairs = semdedup_pairs(df, centroids, threshold, vec_col,
-                               id_col,
-                               # the shared cache (when small) already
-                               # holds celled+norm — a second persist of
-                               # the same rows would only duplicate them
-                               persist_celled=(False if shared_cache
-                                               else None),
-                               assign_method=assign_method,
-                               n_probe=n_probe,
-                               probe_margin=probe_margin,
-                               cell_task_cap=cell_task_cap,
-                               pair_backend=pair_backend,
-                               cells=cells,
-                               vec_dim=vec_dim,
-                               _celled=celled,
-                               _tmap=tmap if probe_counts is not None
-                               else _UNSET)
-        # the auto probe's candidate-volume projection is a PROVEN
-        # upper bound on verified pairs (cosine filtering only removes
-        # rows), so CC can skip its own sizing pass when the bound
-        # already fits the driver (r14: one collect instead of
-        # persist+count+collect).  CC is eager on every strategy, so it
-        # has consumed the shared cache when the block releases it.
-        comp = connected_components(pairs, "id_a", "id_b",
-                                    max_iter=max_iter,
-                                    _edge_bound=probe_counts)
+        # CC is eager on every strategy and returns driver rows or
+        # checkpointed labels, so it is the last reader of the shared
+        # cache (released with the block) and of whatever
+        # semdedup_pairs holds (released with the scope)
+        with scope():
+            pairs = semdedup_pairs(df, centroids, threshold, vec_col,
+                                   id_col,
+                                   # the shared cache (when small)
+                                   # already holds celled+norm — a second
+                                   # persist would only duplicate it
+                                   persist_celled=(False if shared_cache
+                                                   else None),
+                                   assign_method=assign_method,
+                                   n_probe=n_probe,
+                                   probe_margin=probe_margin,
+                                   cell_task_cap=cell_task_cap,
+                                   pair_backend=pair_backend,
+                                   cells=cells,
+                                   vec_dim=vec_dim,
+                                   _celled=celled,
+                                   _tmap=tmap if probe_counts is not None
+                                   else _UNSET)
+            # the auto probe's candidate-volume projection is a PROVEN
+            # upper bound on verified pairs (cosine filtering only
+            # removes rows), so CC can skip its own sizing pass when
+            # the bound already fits the driver (r14: one collect
+            # instead of persist+count+collect)
+            comp = connected_components(pairs, "id_a", "id_b",
+                                        max_iter=max_iter,
+                                        _edge_bound=probe_counts)
     losers = comp.filter(F.col("node") != F.col("comp")) \
         .select(F.col("node").alias(id_col))
     return df.join(losers, id_col, "left_anti")
@@ -2131,21 +2116,12 @@ def semantic_contaminated_ids(corpus: DataFrame, benchmark: DataFrame,
             b = spark.createDataFrame(b_cached.collect(), b.schema)
         else:
             b = b_cached.localCheckpoint(eager=True)
-    cos = F.round(F.try_divide(dot(F.col("__vc"), F.col("__vb")),
-                               F.col("__nc") * F.col("__nb")), 6)
+    # the verifier's NaN guard keeps one NaN-component benchmark row
+    # from flagging every corpus row in its cell
     return (
-        c.join(F.broadcast(b), on="__cell", how="inner")
-        # project the cosine FIRST, filter the projected column (the
-        # semdedup_pairs shape): filtering the raw lambda expression
-        # lets constraint inference synthesize a predicate over the
-        # corpus attrs and mis-push it to the benchmark side —
-        # runtime INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (r9, pinned in
-        # tests/test_r9_fixes.py)
-        .select(F.col(id_col), cos.alias("__cos"))
-        # NaN cosines are unmatchable — without the guard, one
-        # NaN-component benchmark row would flag every corpus row in
-        # its cell as contaminated (Spark NaN-is-largest predicates)
-        .filter(~F.isnan("__cos") & (F.col("__cos") >= threshold))
+        _cosine_verified(c.join(F.broadcast(b), on="__cell", how="inner"),
+                         [id_col], threshold,
+                         ("__vc", "__vb", "__nc", "__nb"), "__cos")
         .select(id_col)
         .distinct()
     )
@@ -3083,60 +3059,33 @@ _HIT_PAIR_BUDGET = 4_000_000
 _HIT_IDX_BLOCK = 65_536
 
 
-def _hit_pairs_numpy_kernel(threshold: float, row_block: int = 2048,
-                            col_block: int = 2048):
+def _hit_pairs_numpy_kernel(threshold: float, block: int = _SLAB):
     """applyInPandas kernel: cross cosines between the probe side
     (``__side`` 0) and index side (``__side`` 1) of one (cell, salt
-    block), emitting (__pid, __iid) pairs with rounded cosine >=
-    threshold.  One BLAS matmul per ``row_block`` probe rows instead
-    of one interpreted Catalyst ArrayAggregate per PAIR — the
-    streaming-ingest twin of :func:`_pairs_numpy_kernel` (r11: the
-    sf100 stream-recovery soak measured the interpreted lane at ~10
-    min per 1000-vector micro-batch against a 2M-vector index; this
-    kernel does the same 31M cosines in seconds).  The sim matrix is
-    blocked on BOTH axes (r12): peak memory is row_block x col_block
-    floats (default 2048x2048 = 32 MB — semdedup's per-block pair
-    budget), never row_block x n_index, which at the salted-block
-    ceiling of ``_HIT_IDX_BLOCK`` index rows would be a ~1 GiB
-    allocation per task and a plausible Python-worker OOM on exactly
-    the fat-cell path the salting exists to serve.  NaN
-    cosines compare False in numpy — the same unmatchable-arrival
-    guard the SQL lane spells as ``~isnan(cos)``.  Rounding caveat as
-    documented on :func:`_pairs_numpy_kernel` (np.round is half-even,
-    Spark round is half-up; exact 5e-7-boundary cosines may differ —
-    the auto router keeps oracle-scale runs on the SQL lane)."""
+    block), emitting (__pid, __iid) pairs — the hits of
+    :func:`_cosine_slabs` — instead of one interpreted Catalyst
+    ArrayAggregate per PAIR (r11: the sf100 stream-recovery soak
+    measured the interpreted lane at ~10 min per 1000-vector
+    micro-batch against a 2M-vector index; this kernel does the same
+    31M cosines in seconds).  The slab bound keeps a salted block of
+    ``_HIT_IDX_BLOCK`` index rows at 32 MB per slab instead of a ~1 GiB
+    allocation per task (r12)."""
     import numpy as np
     import pandas as pd
 
     empty = pd.DataFrame({"__pid": [], "__iid": []})
 
-    def _stack(frame):
-        ids = frame["__id"].to_numpy()
-        X = np.vstack([np.asarray(v, dtype=np.float64)
-                       for v in frame["__v"]])
-        return ids, X, np.sqrt((X * X).sum(axis=1))
-
     def fn(pdf):
         a = pdf[pdf["__side"] == 0]
         b = pdf[pdf["__side"] == 1]
-        if len(a) == 0 or len(b) == 0:
-            return empty
-        ia, Xa, na = _stack(a)
-        ib, Xb, nb = _stack(b)
+        ia, ib = a["__id"].to_numpy(), b["__id"].to_numpy()
         out = []
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, len(ia), row_block):
-                e = min(s + row_block, len(ia))
-                for cs in range(0, len(ib), col_block):
-                    ce = min(cs + col_block, len(ib))
-                    sims = np.round(
-                        (Xa[s:e] @ Xb[cs:ce].T)
-                        / np.outer(na[s:e], nb[cs:ce]), 6)
-                    r, c = np.nonzero(sims >= threshold)
-                    if len(r):
-                        out.append(pd.DataFrame(
-                            {"__pid": ia[s:e][r],
-                             "__iid": ib[cs:ce][c]}))
+        for s, c, hit, _ in _cosine_slabs(a["__v"], b["__v"], threshold,
+                                          block, block):
+            r, k = np.nonzero(hit)
+            if len(r):
+                out.append(pd.DataFrame({"__pid": ia[s + r],
+                                         "__iid": ib[c + k]}))
         return pd.concat(out) if out else empty
 
     return fn
@@ -3239,16 +3188,15 @@ def _embedding_hit_pairs(spark, index_path: str, meta: dict,
             .applyInPandas(kernel, f"__pid {pid_t}, __iid {iid_t}")
         )
 
-    # NaN guard (r9): Spark predicates treat NaN as LARGER than any
-    # value, so a NaN cosine (NaN-component probe x indexed vector)
-    # would count as a hit and silently DROP the arrival; a NaN cosine
-    # is unmatchable under the admit-lane contract
-    cos = F.round(cosine(F.col("__pv"), F.col("__iv")), 6)
-    return (
-        probed.join(idx, on="cell", how="inner")
-        .filter(~F.isnan(cos) & (cos >= threshold))
-        .select("__pid", "__iid")
-    )
+    # a NaN cosine (NaN-component probe x indexed vector) must not
+    # count as a hit, which would silently DROP the arrival
+    return _cosine_verified(
+        probed.withColumn("__pn", norm(F.col("__pv")))
+        .join(idx.withColumn("__in", norm(F.col("__iv"))),
+              on="cell", how="inner"),
+        ["__pid", "__iid"], threshold,
+        ("__pv", "__iv", "__pn", "__in"), "__cos",
+    ).select("__pid", "__iid")
 
 
 def _matchable_vec(vec_col: str):

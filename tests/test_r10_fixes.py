@@ -411,7 +411,7 @@ def test_semdedup_cells_chain_across_slabs(spark):
                                          component_backend="pairs"))
     # row_block=2 → the 9-node chain spans 5 slabs
     kernel = sim._cell_components_kernel(0.95, "vec_id", "embedding",
-                                         row_block=2)
+                                         block=2)
     import pandas as pd
 
     pdf = pd.DataFrame({"vec_id": [r[0] for r in rows],

@@ -4,6 +4,8 @@
   created cached after the scope exits, and its result is unchanged;
 - outside a scope each site keeps at most one live cache;
 - an exception inside a call releases the call's own intermediates;
+- an end-to-end dedup releases its pair caches once their last
+  reader, connected components, has run;
 - raw ``persist``/``cache``/``unpersist`` calls exist only in the
   lifecycle module, ``verbs.collect`` and ``dedup._release_cut``.
 """
@@ -162,6 +164,29 @@ def test_unscoped_holds_bounded_per_site(spark, sf_dir, lookup_index,
     for _ in range(2):
         build(spark, sf_dir, lookup_index, next(_TAGS)).collect()
     assert len(persistent_rdd_ids(spark) - before) <= n_sites
+
+
+def _semdedup_multiprobe(spark, sf_dir, tag):
+    return sim.semdedup(_emb(spark, sf_dir, tag), sim.hyperplanes(64, 16),
+                        threshold=0.4, n_probe=2)
+
+
+def _neardup_dedup(spark, sf_dir, tag):
+    return dedup.neardup_dedup(_docs(spark, sf_dir, tag), threshold=0.2)
+
+
+@pytest.mark.parametrize("dedupe", [_semdedup_multiprobe, _neardup_dedup],
+                         ids=["semdedup[n_probe=2]", "neardup_dedup"])
+def test_dedup_releases_pair_holds_after_cc(spark, sf_dir, dedupe):
+    """The pair relation's last reader is the eager
+    connected_components, whose result is driver rows or checkpointed
+    labels, so nothing the pair build held outlives the call — and
+    the result, read after it, still computes."""
+    tag = next(_TAGS)
+    before = persistent_rdd_ids(spark)
+    out = dedupe(spark, sf_dir, tag)
+    assert persistent_rdd_ids(spark) - before == set()
+    assert 0 < out.count()
 
 
 def test_cc_exception_releases_edge_cache(spark, monkeypatch):
