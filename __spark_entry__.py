@@ -20,8 +20,10 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
+import atexit
 import datetime as dt
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -50,6 +52,24 @@ def _q(sql: str | None):
         return fn
 
     return deco
+
+
+# Root of the files the queries below stage, one per process: two
+# registry runs in one checkout (both ANSI modes at once) would otherwise
+# overwrite each other's tables mid-query.  Fixed at import, removed at
+# exit (by the importing process only: a forked child inherits the hook).
+_SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             ".tmp_stream", f"p{os.getpid()}")
+
+
+def _scratch(name: str) -> str:
+    return os.path.join(_SCRATCH_ROOT, name)
+
+
+@atexit.register
+def _drop_scratch(pid: int = os.getpid()) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> "pdt.Table":
@@ -2814,10 +2834,7 @@ _MINHASH_EST_SQL = ("round(len(list_filter(range(1, 17), "
 def _minhash_index_tmp(sf_dir: str, tag: str) -> str:
     import shutil
 
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        f"mhidx_{tag}_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch(f"mhidx_{tag}_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     return base
 
@@ -3398,10 +3415,7 @@ def q_embedding_filter_new(spark, sf_dir):
     emb = _rp(spark, f"{sf_dir}/embeddings.parquet")
     cents = similarity.hyperplanes(64, 16, seed="efn")
     cbs = similarity.pq_codebooks(64, m=8, k=16)
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "efn_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch("efn_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     similarity.write_ivfpq(emb.filter(F.col("vec_id") % 4 != 0),
                            base, cents, cbs, residual=True)
@@ -3434,10 +3448,7 @@ def q_stream_semantic_ingest(spark, sf_dir):
     emb = _rp(spark, f"{sf_dir}/embeddings.parquet")
     cents = similarity.hyperplanes(64, 16, seed="efn")
     cbs = similarity.pq_codebooks(64, m=8, k=16)
-    root = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "sefn_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    root = _scratch("sefn_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(root, ignore_errors=True)
     idx = os.path.join(root, "idx")
     similarity.write_ivfpq(emb.filter(F.col("vec_id") % 4 != 0),
@@ -4021,10 +4032,7 @@ def q_ivfpq_topk(spark, sf_dir):
     emb = _rp(spark, f"{sf_dir}/embeddings.parquet")
     cents = similarity.hyperplanes(64, 8, seed="ivfpq")
     cbs = similarity.pq_codebooks(64, m=8, k=16)
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", "ivfpq_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch("ivfpq_" + os.path.basename(sf_dir.rstrip("/")))
     similarity.write_ivfpq(emb, staged, cents, cbs, residual=False)
     return similarity.ivfpq_topk(spark, staged, _QVEC, cents, cbs,
                                  k=10, nprobe=2, residual=False, pool=100)
@@ -4050,10 +4058,7 @@ def q_stream_ivfpq_ingest(spark, sf_dir):
     emb = _rp(spark, f"{sf_dir}/embeddings.parquet")
     cents = similarity.hyperplanes(64, 8, seed="ivfpq")
     cbs = similarity.pq_codebooks(64, m=8, k=16)
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "ivfpq_ing_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch("ivfpq_ing_" + os.path.basename(sf_dir.rstrip("/")))
     staging, ckpt, src = base + "_stg", base + "_ckpt", base + "_src"
     for p in (staging, ckpt, src):
         shutil.rmtree(p, ignore_errors=True)
@@ -4139,10 +4144,7 @@ def q_ivfpq_maintain(spark, sf_dir):
     emb = _rp(spark, f"{sf_dir}/embeddings.parquet")
     cents = similarity.hyperplanes(64, 8, seed="ivfpq")
     cbs = similarity.pq_codebooks(64, m=8, k=16)
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "ivfpq_mnt_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch("ivfpq_mnt_" + os.path.basename(sf_dir.rstrip("/")))
     staging = base + "_stg"
     for p in (base, staging):
         shutil.rmtree(p, ignore_errors=True)
@@ -4430,8 +4432,7 @@ def _event_log_staged(spark, sf_dir) -> str:
     tag = (os.path.basename(sf_dir.rstrip("/"))
            .replace(".", "_").replace("-", "_"))
     name = f"ev_log_{tag}"
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream", f"evlog_{tag}")
+    base = _scratch(f"evlog_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     df = ev.load_events(spark, sf_dir)
     prio = (F.when(F.col("event_type") == "purchase", 0)
@@ -4706,10 +4707,7 @@ def q_stream_tumbling(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src_dir = f"{sf_dir}/events.parquet"
     # file stream needs µs timestamps; stage a converted copy once
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")))
     ev.load_events(spark, sf_dir).write.mode("overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
     stream = st.read_event_stream(spark, staged, schema=batch_schema)
@@ -4751,10 +4749,7 @@ def q_stream_interval_join(spark, sf_dir):
     from pydiverse_transform_spark.extras import events as ev
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")))
     ev.load_events(spark, sf_dir).write.mode("overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
 
@@ -4800,10 +4795,7 @@ def q_stream_sliding(spark, sf_dir):
     from pydiverse_transform_spark.extras import events as ev
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")))
     ev.load_events(spark, sf_dir).write.mode("overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
     stream = st.read_event_stream(spark, staged, schema=batch_schema)
@@ -5045,10 +5037,7 @@ def q_stream_session(spark, sf_dir):
     from pydiverse_transform_spark.extras import events as ev
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")))
     ev.load_events(spark, sf_dir).write.mode("overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
     stream = st.read_event_stream(spark, staged, schema=batch_schema)
@@ -6081,11 +6070,7 @@ def q_stream_span_cut(spark, sf_dir):
 
     docs = _rp(spark, f"{sf_dir}/documents.parquet")
     dup = duplicate_spans(docs, "text", "doc_id", window=8)
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream",
-        os.path.basename(sf_dir.rstrip("/")) + "_spancut",
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")) + "_spancut")
     docs.coalesce(1).write.mode("overwrite").parquet(staged)
     schema = spark.read.parquet(staged).schema
     stream = spark.readStream.schema(schema).parquet(staged)
@@ -6190,11 +6175,7 @@ def q_stream_stateful_sessionize(spark, sf_dir):
     # whole corpus (the operator's documented cross-batch contract is
     # per-key time-ordered arrival; the multi-batch path is exercised
     # by tests/test_streaming.py with time-ordered files)
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream",
-        os.path.basename(sf_dir.rstrip("/")) + "_one",
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")) + "_one")
     ev.load_events(spark, sf_dir).coalesce(1).write.mode(
         "overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
@@ -6230,11 +6211,7 @@ def q_stream_dedup(spark, sf_dir):
     from pydiverse_transform_spark.extras import events as ev
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    doubled = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream",
-        os.path.basename(sf_dir.rstrip("/")) + "_doubled",
-    )
+    doubled = _scratch(os.path.basename(sf_dir.rstrip("/")) + "_doubled")
     base = ev.load_events(spark, sf_dir)
     # single file => one availableNow micro-batch, and a watermark wider
     # than the corpus time-span => no fingerprint can expire before its
@@ -6299,11 +6276,7 @@ def q_stream_neardup(spark, sf_dir):
     from pydiverse_transform_spark import streaming as st
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream",
-        "neardup_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch("neardup_" + os.path.basename(sf_dir.rstrip("/")))
     docs = _rp(spark, f"{sf_dir}/documents.parquet")
     # one file in doc_id order => one availableNow micro-batch whose
     # row order IS the oracle's keep-first order
@@ -6349,10 +6322,7 @@ def q_stream_parquet_sink(spark, sf_dir):
     from pydiverse_transform_spark.extras import events as ev
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch(os.path.basename(sf_dir.rstrip("/")))
     ev.load_events(spark, sf_dir).write.mode("overwrite").parquet(staged)
     batch_schema = spark.read.parquet(staged).schema
     stream = st.read_event_stream(spark, staged, schema=batch_schema)
@@ -6361,10 +6331,7 @@ def q_stream_parquet_sink(spark, sf_dir):
         keys=["event_type"], aggs={"n_events": "count(1)"},
     )
     run_id = uuid.uuid4().hex[:8]
-    sink = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", f"sink_{run_id}",
-    )
+    sink = _scratch(f"sink_{run_id}")
     q = st.write_stream_parquet(
         agg, os.path.join(sink, "data"),
         os.path.join(sink, "ckpt"), available_now=True,
@@ -6454,10 +6421,7 @@ def q_time_partitioned_scan(spark, sf_dir):
 
     from pydiverse_transform_spark.extras import events as ev
 
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", "daily_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch("daily_" + os.path.basename(sf_dir.rstrip("/")))
     ev.write_time_partitioned(ev.load_events(spark, sf_dir), staged,
                               ts_col="ts", granularity="day")
     return (
@@ -6673,10 +6637,7 @@ def q_sorted_scan(spark, sf_dir):
 
     import pydiverse_transform_spark as pdt
 
-    staged = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", "sorted_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    staged = _scratch("sorted_" + os.path.basename(sf_dir.rstrip("/")))
     t = pdt.read_parquet(spark, f"{sf_dir}/orders.parquet", name="orders")
     t >> pdt.write_sorted(staged, "o_orderkey", num_files=8)
     return (
@@ -6711,10 +6672,7 @@ def q_compacted_scan(spark, sf_dir):
         write_manifest,
     )
 
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", "compact_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch("compact_" + os.path.basename(sf_dir.rstrip("/")))
     frag, out = base + "_frag", base + "_out"
     shutil.rmtree(out, ignore_errors=True)
     docs = _rp(spark, f"{sf_dir}/documents.parquet")
@@ -6769,10 +6727,7 @@ def q_zorder_scan(spark, sf_dir):
         zorder_key,
     )
 
-    out = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".tmp_stream", "zorder_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    out = _scratch("zorder_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(out, ignore_errors=True)
     ev = _rp(spark, f"{sf_dir}/events.parquet")
     zdf, _ = zorder_key(ev, ["user_id", "ts"], bits=8)
@@ -6845,10 +6800,7 @@ def q_compact_zorder(spark, sf_dir):
         rowgroup_pruning_stats,
     )
 
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "czo_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    base = _scratch("czo_" + os.path.basename(sf_dir.rstrip("/")))
     debris, out = base + "_in", base + "_out"
     shutil.rmtree(debris, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
@@ -6981,10 +6933,7 @@ def q_csv_roundtrip(spark, sf_dir):
 
     import pydiverse_transform_spark as pdt
 
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "csv_rt_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    path = _scratch("csv_rt_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(path, ignore_errors=True)
     t = _t(spark, sf_dir, "supplier")
     t >> pdt.write_csv(path, mode="overwrite")
@@ -7059,10 +7008,7 @@ def q_jdbc_roundtrip(spark, sf_dir):
 
     import pydiverse_transform_spark as pdt
 
-    dbdir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_stream",
-        "jdbc_rt_" + os.path.basename(sf_dir.rstrip("/")),
-    )
+    dbdir = _scratch("jdbc_rt_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(dbdir, ignore_errors=True)
     url = f"jdbc:derby:{dbdir}/db;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}

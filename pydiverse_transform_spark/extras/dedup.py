@@ -15,7 +15,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..storage import hold, owned, scope
-from .util import _small_corpus, fan_out, render
+from .util import (_partition_footer_rows, _small_corpus, fan_out,
+                   fs_read_json, fs_write_json, recover_swap, render,
+                   swap_in)
 
 __all__ = [
     "exact_dedup", "exact_dedup_rows", "word_shingles", "char_shingles",
@@ -1375,8 +1377,6 @@ def write_minhash_index(df: DataFrame, path: str, *,
     partitioned by ``band`` + the parameter sidecar.  One map pass over
     the corpus, one partitioned write — no shuffle (the band explode is
     map-side and the writer splits partition dirs per task)."""
-    from .util import fs_write_json
-
     if n_hashes % bands:
         raise ValueError(f"n_hashes={n_hashes} not divisible by "
                          f"bands={bands}")
@@ -1396,8 +1396,6 @@ def write_minhash_index(df: DataFrame, path: str, *,
 def read_minhash_meta(spark, path: str) -> dict:
     """Load the parameter sidecar of a :func:`write_minhash_index`
     index."""
-    from .util import fs_read_json
-
     try:
         meta = fs_read_json(spark, path + "/" + MINHASH_META_FILE)
     except FileNotFoundError:
@@ -1641,52 +1639,9 @@ def minhash_index_recover(spark, path: str) -> str | None:
     run.  ``neardup_ingest_stream`` calls this automatically at stream
     construction; call it manually when another process reads the index
     after a crashed maintenance run.  Safe no-op (returns ``None``)
-    when no swap journal exists."""
-    from .util import fs_read_json
-
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    new_p, old_p = path + ".__new", path + ".__old"
-    journal = path + ".__swap"
-    if not fs.exists(P(journal)):
-        return None
-    try:
-        jrec = fs_read_json(spark, journal)
-    except Exception:
-        # partial JSON from a crash mid-journal-write: the journal is
-        # written BEFORE the first rename, so the swap never started
-        jrec = {}
-    if jrec.get("index", path) != path:
-        raise IOError(
-            f"swap journal {journal!r} records index "
-            f"{jrec.get('index')!r} but this run was invoked for "
-            f"{path!r}; refusing to recover")
-    has_idx, has_new, has_old = (fs.exists(P(path)),
-                                 fs.exists(P(new_p)),
-                                 fs.exists(P(old_p)))
-    recovered = None
-    if has_idx and has_new:
-        fs.delete(P(new_p), True)
-        recovered = "rolled_back_stale_new"
-    elif not has_idx and has_old and has_new:
-        if not fs.rename(P(new_p), P(path)):
-            raise IOError(f"recovery rename {new_p} -> {path} failed")
-        fs.delete(P(old_p), True)
-        recovered = "rolled_forward_new"
-    elif has_idx and has_old:
-        fs.delete(P(old_p), True)
-        recovered = "rolled_forward_cleanup"
-    elif not has_idx and has_old:
-        if not fs.rename(P(old_p), P(path)):
-            raise IOError(f"recovery rename {old_p} -> {path} failed")
-        recovered = "rolled_back_old"
-    fs.delete(P(journal), False)
-    return recovered
+    when no swap journal exists.  Decision table:
+    :func:`extras.util.recover_swap`."""
+    return recover_swap(spark, path)
 
 
 def minhash_index_maintain(spark, path: str, *,
@@ -1702,46 +1657,24 @@ def minhash_index_maintain(spark, path: str, *,
     ids) but bloat every scan and pair each hot bucket row against the
     probe twice.
 
-    Crash-safety mirrors :func:`similarity.ivfpq_maintain`'s journal
-    protocol with no staging/checkpoint lanes (the minhash index is
-    model-free — appends need no fold): journal -> index -> .__old,
-    .__new -> index, delete .__old, delete journal; recovery handles
-    the same four survivor states.  Returns compact stats +
+    Crash-safety is the journaled swap of :func:`extras.util.swap_in`
+    (shared with :func:`similarity.ivfpq_maintain`), with no
+    staging/checkpoint roots: the minhash index is model-free, so
+    appends need no fold.  Returns compact stats +
     {"recovered": <action or None>}."""
     from ..sources.sinks import compact_parquet
-    from .util import fs_write_json
 
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    def build(new_path: str) -> dict:
+        meta = read_minhash_meta(spark, path)
+        stats = compact_parquet(
+            spark, path, new_path, target_file_bytes=target_file_bytes,
+            partition_by=["band"],
+            dedup_cols=[meta["id_col"], "band"] if dedup_rows else None,
+        )
+        fs_write_json(spark, new_path + "/" + MINHASH_META_FILE, meta)
+        return stats
 
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    new_p, old_p = path + ".__new", path + ".__old"
-    journal = path + ".__swap"
-    recovered = minhash_index_recover(spark, path)
-    if fs.exists(P(new_p)):
-        fs.delete(P(new_p), True)
-    if fs.exists(P(old_p)):
-        fs.delete(P(old_p), True)
-
-    meta = read_minhash_meta(spark, path)
-    stats = compact_parquet(
-        spark, path, new_p, target_file_bytes=target_file_bytes,
-        partition_by=["band"],
-        dedup_cols=[meta["id_col"], "band"] if dedup_rows else None,
-    )
-    fs_write_json(spark, new_p + "/" + MINHASH_META_FILE, meta)
-
-    fs_write_json(spark, journal, {"index": path})
-    if not fs.rename(P(path), P(old_p)):
-        raise IOError(f"swap rename {path} -> {old_p} failed")
-    if not fs.rename(P(new_p), P(path)):
-        raise IOError(f"swap rename {new_p} -> {path} failed")
-    fs.delete(P(old_p), True)
-    fs.delete(P(journal), False)
-    return {**stats, "recovered": recovered}
+    return swap_in(spark, path, build)
 
 
 # auto-governor regime boundary (r13): projected candidate ROWS (sum
@@ -1765,35 +1698,15 @@ def _index_footer_rows(path: str) -> int | None:
     None when the path isn't a local directory or pyarrow is missing
     — callers then fall back to the exact projection scan.  Accurate
     through appends (each append adds plain files)."""
-    import glob as _glob
-    import os as _os
-
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-        from urllib.request import url2pathname
-
-        p = urlparse(path)
-        if p.netloc not in ("", "localhost"):
-            return None
-        local = url2pathname(p.path)
-    else:
-        local = path
-    if not _os.path.isdir(local):
+    parts = _partition_footer_rows(path, "band")
+    if not parts or not any(parts):
+        # an existing directory with NO band-partitioned files is a
+        # layout this helper does not understand, not an empty
+        # index — returning 0 would make the fast-path bound
+        # 0 <= budget and silently skip the governor (r13 advice);
+        # None sends callers to the exact index-scan projection
         return None
-    try:
-        import pyarrow.parquet as _pq
-
-        files = _glob.glob(_os.path.join(local, "band=*", "*.parquet"))
-        if not files:
-            # an existing directory with NO band-partitioned files is a
-            # layout this helper does not understand, not an empty
-            # index — returning 0 would make the fast-path bound
-            # 0 <= budget and silently skip the governor (r13 advice);
-            # None sends callers to the exact index-scan projection
-            return None
-        return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
+    return sum(map(sum, parts))
 
 
 def _projected_candidate_rows(idx: DataFrame, pb: DataFrame,

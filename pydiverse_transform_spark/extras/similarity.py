@@ -2388,57 +2388,6 @@ def ivfpq_encode(df: DataFrame, centroids: list[list[float]],
     return coded
 
 
-def _cell_footer_histogram(path: str) -> list[int]:
-    """Per-cell row counts for a ``partitionBy("cell")`` parquet layout,
-    read from file FOOTERS only (pyarrow metadata; no Spark job, no
-    data pages).  Returns [] when the path isn't a local directory
-    with ``cell=...`` children (remote filesystems, pyarrow-less
-    hosts: the caller skips the skew check rather than paying a scan
-    — a debug log line records the silent downgrade, r12 advice).
-    ``file:`` URIs are parsed with urllib, so all three Spark/Hadoop
-    spellings — ``file:/p``, ``file://p``, ``file:///p`` — resolve to
-    the same local path."""
-    import glob as _glob
-    import os as _os
-
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-        from urllib.request import url2pathname
-
-        p = urlparse(path)
-        # file:/path (no netloc) and file:///path both leave the path
-        # component; file://host/path would name a remote host — only
-        # empty/localhost netlocs are local
-        if p.netloc not in ("", "localhost"):
-            _log.debug("cell skew check skipped: non-local file URI "
-                       "%r", path)
-            return []
-        local = url2pathname(p.path)
-    else:
-        local = path
-    if not _os.path.isdir(local):
-        _log.debug("cell skew check skipped: %r is not a local "
-                   "directory", path)
-        return []
-    counts: list[int] = []
-    for d in sorted(_glob.glob(_os.path.join(local, "cell=*"))):
-        if not _os.path.isdir(d):
-            continue
-        try:
-            import pyarrow.parquet as _pq
-
-            n = sum(
-                _pq.ParquetFile(f).metadata.num_rows
-                for f in _glob.glob(_os.path.join(d, "*.parquet"))
-            )
-        except Exception:
-            _log.debug("cell skew check skipped: footer read failed "
-                       "under %r", d, exc_info=True)
-            return []
-        counts.append(int(n))
-    return counts
-
-
 def write_ivfpq(df: DataFrame, path: str,
                 centroids: list[list[float]],
                 codebooks: list[list[list[float]]],
@@ -2482,7 +2431,16 @@ def write_ivfpq(df: DataFrame, path: str,
     if write_meta:
         write_ivfpq_meta(df.sparkSession, path, centroids, codebooks,
                          residual, store_vectors, vec_col, id_col)
-    counts = _cell_footer_histogram(path) if skew_check else []
+    counts = []
+    if skew_check:
+        from .util import _partition_footer_rows
+
+        parts = _partition_footer_rows(path, "cell")
+        if parts is None:
+            # the silent downgrade leaves a trace (r12 advice)
+            _log.debug("cell skew check skipped: no local footer walk "
+                       "of %r", path)
+        counts = [sum(p) for p in parts or []]
     if counts:
         total, biggest = sum(counts), max(counts)
         k = max(1, len(centroids))
@@ -2658,6 +2616,7 @@ def ivfpq_fold_staging(spark, index_path: str, staging_path: str | None,
     re-append identical rows; one copy survives).  Returns
     compact_parquet's stats."""
     from ..sources.sinks import _hadoop_files, compact_parquet
+    from .util import hadoop_fs
 
     meta = read_ivfpq_meta(spark, index_path)
     roots = [index_path]
@@ -2665,10 +2624,8 @@ def ivfpq_fold_staging(spark, index_path: str, staging_path: str | None,
     # maintenance rerun after the reset already happened) folds as a
     # plain compaction of the base — not an error
     if staging_path is not None:
-        _, fs = _hadoop_fs(spark, staging_path)
-        jvm = spark.sparkContext._jvm
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(staging_path)) \
-                and _hadoop_files(spark, staging_path):
+        hpath, fs = hadoop_fs(spark, staging_path)
+        if fs.exists(hpath) and _hadoop_files(spark, staging_path):
             roots.append(staging_path)
     stats = compact_parquet(
         spark, roots, out_path,
@@ -2681,104 +2638,6 @@ def ivfpq_fold_staging(spark, index_path: str, staging_path: str | None,
         meta["vec_col"], meta["id_col"],
     )
     return stats
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return jvm, fs
-
-
-def _ivfpq_swap_recover(spark, index_path: str,
-                        staging_path: str | None = None,
-                        checkpoint_path: str | None = None, *,
-                        verify_paths: bool = True) -> str | None:
-    """Journal-recovery preamble of :func:`ivfpq_maintain`: if a
-    ``<index>.__swap`` journal is present, finish or roll back the
-    interrupted swap (decision table in ivfpq_maintain's docstring) and
-    delete the journal.  No-op (returns ``None``) when no journal
-    exists — strays without a journal are a crashed PRE-swap fold and
-    are left for ivfpq_maintain's own cleanup.
-
-    ``verify_paths=True`` (the maintain path) fails loudly when the
-    journal records a different staging root than this call's — a
-    mismatched rerun must not reset a root whose rows were never
-    folded.  ``verify_paths=False`` (the :func:`ivfpq_recover` path)
-    trusts the JOURNAL's recorded paths for the roll-forward reset —
-    the recovering process finishes whatever the interrupted run was
-    doing, with the interrupted run's own arguments."""
-    jvm, fs = _hadoop_fs(spark, index_path)
-
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    new_p, old_p = index_path + ".__new", index_path + ".__old"
-    journal = index_path + ".__swap"
-    if not fs.exists(P(journal)):
-        return None
-    # The journal records which staging/checkpoint roots the
-    # interrupted run was folding.  A rerun invoked with DIFFERENT
-    # paths must not reset roots that were never folded into the
-    # index (that would be silent data loss) — verify and fail
-    # loudly on mismatch; the roll-forward reset below uses the
-    # journal's recorded paths, not this call's arguments.
-    from .util import fs_read_json
-
-    try:
-        jrec = fs_read_json(spark, journal)
-    except Exception:
-        # a crash mid-journal-write can leave partial JSON; the
-        # journal is written BEFORE the first rename, so an
-        # unreadable journal means the swap never started — treat
-        # it as recording this call's own paths
-        jrec = {}
-    j_staging = jrec.get("staging", staging_path)
-    j_ckpt = jrec.get("checkpoint", checkpoint_path)
-    if jrec.get("index", index_path) != index_path:
-        raise IOError(
-            f"swap journal {journal!r} records index "
-            f"{jrec.get('index')!r} but this run was invoked for "
-            f"{index_path!r}; refusing to recover")
-    if verify_paths and j_staging != staging_path:
-        raise IOError(
-            f"swap journal {journal!r} records staging root "
-            f"{j_staging!r} but this run was invoked with "
-            f"{staging_path!r}; rerun ivfpq_maintain with the "
-            "journaled staging root to finish recovery first")
-    has_idx, has_new, has_old = (fs.exists(P(index_path)),
-                                 fs.exists(P(new_p)),
-                                 fs.exists(P(old_p)))
-    recovered = None
-    roll_forward = False
-    if has_idx and has_new:
-        fs.delete(P(new_p), True)
-        recovered = "rolled_back_stale_new"
-    elif not has_idx and has_old and has_new:
-        if not fs.rename(P(new_p), P(index_path)):
-            raise IOError(f"recovery rename {new_p} -> "
-                          f"{index_path} failed")
-        fs.delete(P(old_p), True)
-        recovered, roll_forward = "rolled_forward_new", True
-    elif has_idx and has_old:
-        fs.delete(P(old_p), True)
-        recovered, roll_forward = "rolled_forward_cleanup", True
-    elif not has_idx and has_old:
-        if not fs.rename(P(old_p), P(index_path)):
-            raise IOError(f"recovery rename {old_p} -> "
-                          f"{index_path} failed")
-        recovered = "rolled_back_old"
-    fs.delete(P(journal), False)
-    if roll_forward:
-        # the swapped-in index already CONTAINS the staged rows —
-        # finish the interrupted protocol's reset phase now, or a
-        # later fold would double-count them.  Reset the roots the
-        # JOURNAL recorded.
-        if j_staging is not None:
-            fs.delete(P(j_staging), True)
-        if j_ckpt is not None:
-            fs.delete(P(j_ckpt), True)
-    return recovered
 
 
 def ivfpq_recover(spark, index_path: str) -> str | None:
@@ -2796,8 +2655,11 @@ def ivfpq_recover(spark, index_path: str) -> str | None:
     stream construction; call it manually when another process reads
     the index after a crashed maintenance run.  Trusts the journal's
     own recorded staging/checkpoint paths for the roll-forward reset.
-    Safe no-op (returns ``None``) when no swap journal exists."""
-    return _ivfpq_swap_recover(spark, index_path, verify_paths=False)
+    Safe no-op (returns ``None``) when no swap journal exists.
+    Decision table: :func:`extras.util.recover_swap`."""
+    from .util import recover_swap
+
+    return recover_swap(spark, index_path)
 
 
 def ivfpq_maintain(spark, index_path: str, staging_path: str | None,
@@ -2818,76 +2680,25 @@ def ivfpq_maintain(spark, index_path: str, staging_path: str | None,
     whose ``maintain_every`` hook calls this with ``dedup_ids=True``
     to fold away replayed at-least-once appends.
 
-    Crash-safety is a journal-recovery protocol (the caller-assembled
-    r6 flow left the swap window undocumented):
-
-    1. **recover** — if a ``<index>.__swap`` journal is present, a
-       previous run died mid-swap; finish or roll back based on which
-       directories survived (all four states are handled, see below).
-       The journal records the index/staging/checkpoint paths of the
-       interrupted run: a rerun invoked with a DIFFERENT staging root
-       fails loudly instead of resetting a root whose rows were never
-       folded, and the roll-forward reset targets the journaled paths.
-    2. **fold** — rewrite base + staging into ``<index>.__new``.  The
-       EXPENSIVE phase; the live index is read-only input and stays
-       fully queryable throughout.  A crash here leaves a stale
-       ``.__new`` that the next run deletes — nothing else changed.
-    3. **swap** — write the journal, then: ``index -> .__old``,
-       ``.__new -> index``, delete ``.__old``, delete journal.  Each
-       rename is a metadata-only directory move (atomic on HDFS/local;
-       on object stores prefer a catalog-level pointer swap).  The only
-       instant ``index_path`` does not resolve is between the two
-       renames; a crash inside it is repaired forward by recovery
-       (``.__new`` is complete by construction once the journal
-       exists).
-    4. **reset** — delete staging (+ checkpoint).  Safe to redo: after
-       the swap the staged rows live in the index, so a crash between
-       swap and reset only risks DOUBLE-listing via ``extra_paths``,
-       never loss, and rerunning ivfpq_maintain folds it away.
-
-    Recovery decision table (journal present):
-    index ∧ .__new          -> roll BACK: delete .__new (fold rerun)
-    ¬index ∧ .__old ∧ .__new -> roll FORWARD: .__new -> index
-    index ∧ .__old ∧ ¬.__new -> roll FORWARD: delete .__old
-    ¬index ∧ .__old ∧ ¬.__new -> roll BACK: .__old -> index
+    Crash-safety is the journaled swap of :func:`extras.util.swap_in`
+    (shared with :func:`dedup.minhash_index_maintain`; protocol and
+    recovery decision table documented there): the fold writes
+    ``<index>.__new`` while the live index stays queryable, a journal
+    recording the index/staging/checkpoint paths brackets the two
+    directory renames, and staging + checkpoint are reset once the
+    swap has landed.  A rerun invoked with a DIFFERENT staging root
+    than an interrupted run's journal fails loudly instead of
+    resetting a root whose rows were never folded.
 
     Returns compact stats + {"recovered": <action or None>}."""
-    jvm, fs = _hadoop_fs(spark, index_path)
+    from .util import swap_in
 
-    def P(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    new_p, old_p = index_path + ".__new", index_path + ".__old"
-    journal = index_path + ".__swap"
-    recovered = _ivfpq_swap_recover(spark, index_path, staging_path,
-                                    checkpoint_path, verify_paths=True)
-    if fs.exists(P(new_p)):       # stale fold from a phase-2 crash
-        fs.delete(P(new_p), True)
-    if fs.exists(P(old_p)):
-        fs.delete(P(old_p), True)
-
-    stats = ivfpq_fold_staging(spark, index_path, staging_path, new_p,
-                               target_file_bytes=target_file_bytes,
-                               dedup_ids=dedup_ids)
-
-    from .util import fs_write_json
-
-    fs_write_json(spark, journal, {
-        "index": index_path, "staging": staging_path,
-        "checkpoint": checkpoint_path,
-    })
-    if not fs.rename(P(index_path), P(old_p)):
-        raise IOError(f"swap rename {index_path} -> {old_p} failed")
-    if not fs.rename(P(new_p), P(index_path)):
-        raise IOError(f"swap rename {new_p} -> {index_path} failed")
-    fs.delete(P(old_p), True)
-    fs.delete(P(journal), False)
-
-    if staging_path is not None:
-        fs.delete(P(staging_path), True)
-    if checkpoint_path is not None:
-        fs.delete(P(checkpoint_path), True)
-    return {**stats, "recovered": recovered}
+    return swap_in(
+        spark, index_path,
+        lambda new_path: ivfpq_fold_staging(
+            spark, index_path, staging_path, new_path,
+            target_file_bytes=target_file_bytes, dedup_ids=dedup_ids),
+        staging=staging_path, checkpoint=checkpoint_path)
 
 
 def ivfpq_topk(spark, path: str, query_vec: list[float],

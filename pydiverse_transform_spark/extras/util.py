@@ -332,15 +332,23 @@ def render(spec, x: Column | str, *args, **kw) -> Column:
     return spec(F, x, *args, **kw)
 
 
+def hadoop_fs(spark, path: str):
+    """(Hadoop ``Path`` of ``path``, the ``FileSystem`` that serves it)
+    — the one lookup every sidecar, listing and swap goes through, so
+    index files live on the same filesystem (local, HDFS, S3A…) as the
+    dataset they describe."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return hpath, fs
+
+
 def fs_write_json(spark, path: str, obj: dict) -> None:
     """Write ``obj`` as JSON to ``path`` through Hadoop's FileSystem —
     same-filesystem as the dataset it describes (local, HDFS, S3A…),
     unlike a driver-local ``open()``.  Overwrites."""
     import json
 
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
         out.write(bytearray(json.dumps(obj).encode()))
@@ -353,11 +361,10 @@ def fs_read_json(spark, path: str) -> dict:
     FileNotFoundError when absent."""
     import json
 
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         raise FileNotFoundError(path)
+    jvm = spark.sparkContext._jvm
     stream = fs.open(hpath)
     try:
         data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
@@ -378,10 +385,182 @@ def fs_stat(spark, path: str) -> tuple[int, int]:
     stronger cache key than mtime alone: object stores report mtime at
     1 s granularity, so a rebuild-then-query inside the same second is
     only caught when the length moved too."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         raise FileNotFoundError(path)
     st = fs.getFileStatus(hpath)
     return st.getModificationTime(), st.getLen()
+
+
+def recover_swap(spark, path: str, staging: str | None = None,
+                 checkpoint: str | None = None, *,
+                 verify: bool = False) -> str | None:
+    """Finish or roll back a :func:`swap_in` that died mid-swap.  No-op
+    (returns ``None``) when no ``<path>.__swap`` journal exists — strays
+    without a journal are a crashed BUILD and are left for swap_in's own
+    cleanup.  Otherwise the survivors decide (journal present):
+
+    index ∧ .__new           -> roll BACK: delete .__new (build rerun)
+    ¬index ∧ .__old ∧ .__new -> roll FORWARD: .__new -> index
+    index ∧ .__old ∧ ¬.__new -> roll FORWARD: delete .__old
+    ¬index ∧ .__old ∧ ¬.__new -> roll BACK: .__old -> index
+
+    and the journal is deleted.  A roll FORWARD also finishes the
+    interrupted run's reset phase on the staging/checkpoint roots the
+    JOURNAL recorded: the swapped-in index already contains the staged
+    rows, so a later fold would otherwise count them twice.
+
+    A journal naming another index is refused.  ``verify=True`` (the
+    :func:`swap_in` path) also refuses a journal that names another
+    staging root than ``staging`` — a mismatched rerun must not reset a
+    root whose rows were never folded.  ``verify=False`` (the
+    standalone ``*_recover`` entry points) trusts the journal's own
+    paths: the recovering process finishes whatever the interrupted run
+    was doing, with that run's arguments."""
+    hpath, fs = hadoop_fs(spark, path)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    new_p, old_p = path + ".__new", path + ".__old"
+    journal = path + ".__swap"
+    if not fs.exists(P(journal)):
+        return None
+    try:
+        jrec = fs_read_json(spark, journal)
+    except Exception:
+        # a crash mid-journal-write can leave partial JSON; the journal
+        # is written BEFORE the first rename, so an unreadable journal
+        # means the swap never started — treat it as recording this
+        # call's own paths
+        jrec = {}
+    j_staging = jrec.get("staging", staging)
+    j_ckpt = jrec.get("checkpoint", checkpoint)
+    if jrec.get("index", path) != path:
+        raise IOError(
+            f"swap journal {journal!r} records index "
+            f"{jrec.get('index')!r} but this run was invoked for "
+            f"{path!r}; refusing to recover")
+    if verify and j_staging != staging:
+        raise IOError(
+            f"swap journal {journal!r} records staging root "
+            f"{j_staging!r} but this run was invoked with "
+            f"{staging!r}; rerun ivfpq_maintain with the "
+            "journaled staging root to finish recovery first")
+    has_idx, has_new, has_old = (fs.exists(hpath), fs.exists(P(new_p)),
+                                 fs.exists(P(old_p)))
+    recovered = None
+    roll_forward = False
+    if has_idx and has_new:
+        fs.delete(P(new_p), True)
+        recovered = "rolled_back_stale_new"
+    elif not has_idx and has_old and has_new:
+        if not fs.rename(P(new_p), hpath):
+            raise IOError(f"recovery rename {new_p} -> {path} failed")
+        fs.delete(P(old_p), True)
+        recovered, roll_forward = "rolled_forward_new", True
+    elif has_idx and has_old:
+        fs.delete(P(old_p), True)
+        recovered, roll_forward = "rolled_forward_cleanup", True
+    elif not has_idx and has_old:
+        if not fs.rename(P(old_p), hpath):
+            raise IOError(f"recovery rename {old_p} -> {path} failed")
+        recovered = "rolled_back_old"
+    fs.delete(P(journal), False)
+    if roll_forward:
+        for root in (j_staging, j_ckpt):
+            if root is not None:
+                fs.delete(P(root), True)
+    return recovered
+
+
+def swap_in(spark, path: str, build, *, staging: str | None = None,
+            checkpoint: str | None = None) -> dict:
+    """Rebuild the persisted index at ``path`` and swap the result in
+    crash-safely: the one protocol behind ``minhash_index_maintain``
+    and ``ivfpq_maintain``.  ``build(out_path)`` writes the fresh index
+    (data and sidecar) to ``out_path`` and returns its stats;
+    ``staging``/``checkpoint`` are roots whose contents the build folds
+    in, reset once the swap has landed.
+
+    1. **recover** — :func:`recover_swap` (``verify=True``) finishes or
+       rolls back a previous run that died mid-swap, then any stale
+       ``.__new``/``.__old`` is dropped.
+    2. **build** — into ``<path>.__new``.  The EXPENSIVE phase; the
+       live index is read-only input and stays fully queryable.  A
+       crash here leaves a stale ``.__new`` that the next run deletes —
+       nothing else changed.
+    3. **swap** — write the journal ``<path>.__swap`` (index, staging
+       and checkpoint paths), then: ``index -> .__old``, ``.__new ->
+       index``, delete ``.__old``, delete the journal.  Each rename is
+       a metadata-only directory move (atomic on HDFS/local; on object
+       stores prefer a catalog-level pointer swap).  The only instant
+       ``path`` does not resolve is between the two renames; a crash
+       inside it is repaired forward by recovery (``.__new`` is
+       complete by construction once the journal exists).
+    4. **reset** — delete staging and checkpoint.  Safe to redo: after
+       the swap the staged rows live in the index, so a crash between
+       swap and reset only risks DOUBLE-listing them, never loss, and
+       the next run folds it away.
+
+    Returns the build's stats + {"recovered": <recover_swap's action
+    or None>}."""
+    hpath, fs = hadoop_fs(spark, path)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    new_p, old_p = path + ".__new", path + ".__old"
+    journal = path + ".__swap"
+    recovered = recover_swap(spark, path, staging, checkpoint, verify=True)
+    for stale in (new_p, old_p):
+        if fs.exists(P(stale)):
+            fs.delete(P(stale), True)
+    stats = build(new_p)
+    fs_write_json(spark, journal, {
+        "index": path, "staging": staging, "checkpoint": checkpoint,
+    })
+    if not fs.rename(hpath, P(old_p)):
+        raise IOError(f"swap rename {path} -> {old_p} failed")
+    if not fs.rename(P(new_p), hpath):
+        raise IOError(f"swap rename {new_p} -> {path} failed")
+    fs.delete(P(old_p), True)
+    fs.delete(P(journal), False)
+    for root in (staging, checkpoint):
+        if root is not None:
+            fs.delete(P(root), True)
+    return {**stats, "recovered": recovered}
+
+
+def _partition_footer_rows(path: str, key: str) -> list[list[int]] | None:
+    """Per-file parquet row counts under each ``key=...`` partition dir
+    of a local dataset, read from file FOOTERS only (pyarrow metadata;
+    no Spark job, no data pages), one list per partition dir in sorted
+    order.  ``None`` when the path is not a local directory or a footer
+    cannot be read (remote filesystems, pyarrow-less hosts) — callers
+    then pick their own fallback.  ``file:`` URIs are parsed with
+    urllib, so all three Spark/Hadoop spellings — ``file:/p``,
+    ``file://p``, ``file:///p`` — resolve to the same local path."""
+    import glob as _glob
+    import os as _os
+
+    if path.startswith("file:"):
+        from urllib.parse import urlparse
+        from urllib.request import url2pathname
+
+        p = urlparse(path)
+        # file:/path (no netloc) and file:///path both leave the path
+        # component; file://host/path would name a remote host — only
+        # empty/localhost netlocs are local
+        if p.netloc not in ("", "localhost"):
+            return None
+        local = url2pathname(p.path)
+    else:
+        local = path
+    if not _os.path.isdir(local):
+        return None
+    try:
+        import pyarrow.parquet as _pq
+
+        return [
+            [_pq.ParquetFile(f).metadata.num_rows
+             for f in _glob.glob(_os.path.join(d, "*.parquet"))]
+            for d in sorted(_glob.glob(_os.path.join(local, f"{key}=*")))
+            if _os.path.isdir(d)
+        ]
+    except Exception:
+        return None

@@ -370,9 +370,9 @@ def _hadoop_files(spark, path: str):
     """(path, size_bytes) for every data file under ``path``, via the
     JVM Hadoop FileSystem (works on any supported scheme: file://,
     hdfs://, s3a://...)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    from ..extras.util import hadoop_fs
+
+    hpath, fs = hadoop_fs(spark, path)
     root = fs.makeQualified(hpath).toString().rstrip("/")
     out = []
     it = fs.listFiles(hpath, True)
@@ -537,15 +537,8 @@ def write_manifest(spark, path: str,
     """Compute :func:`dataset_manifest` and persist it as a JSON
     sidecar inside the dataset directory (underscore-prefixed, so scans
     ignore it like _SUCCESS).  Returns the manifest."""
-    import json
+    from ..extras.util import fs_write_json
 
     man = dataset_manifest(spark, path, partition_cols)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path + "/" + filename)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(json.dumps(man, indent=1).encode()))
-    finally:
-        out.close()
+    fs_write_json(spark, path + "/" + filename, man)
     return man

@@ -379,6 +379,42 @@ def span_cut_stream(docs: DataFrame, dup_hashes: DataFrame,
 
 
 
+def _start(w, available_now: bool, trigger_seconds: int | None):
+    """Start the DataStreamWriter ``w``: ``available_now`` drains the
+    currently-available input and stops, else micro-batch every
+    ``trigger_seconds`` (as fast as data arrives when None)."""
+    if available_now:
+        w = w.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
+    return w.start()
+
+
+def _maintain_hook(spark, index_path: str, maintain_every: int | None,
+                   admit: bool, maintain):
+    """Validate an ingest stream's ``maintain_every`` and return its
+    per-batch hook: after every batch whose ``batch_id % N == N - 1``
+    (id-keyed, so a replayed batch re-fires the same fold idempotently)
+    run ``maintain()``, then refresh cached listings of ``index_path`` —
+    the maintenance swap is a directory rename outside Spark's write
+    path."""
+    if maintain_every is not None and maintain_every < 1:
+        raise ValueError(f"maintain_every must be >= 1, "
+                         f"got {maintain_every}")
+    if maintain_every is not None and not admit:
+        raise ValueError("maintain_every without admit=True has "
+                         "nothing to compact — the stream never "
+                         "appends to the index")
+
+    def maintain_due(batch_id: int) -> None:
+        if (maintain_every is not None
+                and batch_id % maintain_every == maintain_every - 1):
+            maintain()
+            spark.catalog.refreshByPath(index_path)
+
+    return maintain_due
+
+
 def neardup_ingest_stream(stream_docs: DataFrame, index_path: str,
                           out_path: str, checkpoint: str, *,
                           threshold: float = 0.7, admit: bool = True,
@@ -462,13 +498,9 @@ def neardup_ingest_stream(stream_docs: DataFrame, index_path: str,
     if probe_strategy not in ("broadcast", "shuffle"):
         raise ValueError(f"probe_strategy must be 'broadcast' or "
                          f"'shuffle', got {probe_strategy!r}")
-    if maintain_every is not None and maintain_every < 1:
-        raise ValueError(f"maintain_every must be >= 1, "
-                         f"got {maintain_every}")
-    if maintain_every is not None and not admit:
-        raise ValueError("maintain_every without admit=True has "
-                         "nothing to compact — the stream never "
-                         "appends to the index")
+    maintain_due = _maintain_hook(
+        spark, index_path, maintain_every, admit,
+        lambda: minhash_index_maintain(spark, index_path))
 
     def process(batch_df, batch_id):
         # the batch is tokenized+minhashed ONCE; the persisted bucket
@@ -503,23 +535,11 @@ def neardup_ingest_stream(stream_docs: DataFrame, index_path: str,
                 _append_probe_buckets(
                     index_path, meta,
                     pb.join(ids, on="probe_id", how="left_semi"))
-                if (maintain_every is not None
-                        and batch_id % maintain_every
-                        == maintain_every - 1):
-                    # drop replay-duplicate bucket rows and compact the
-                    # batch-sized append files; the swap is a directory
-                    # rename outside Spark's write path, so refresh
-                    # any cached listings of the old directory
-                    minhash_index_maintain(spark, index_path)
-                    spark.catalog.refreshByPath(index_path)
+                maintain_due(batch_id)
 
     w = (stream_docs.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    return _start(w, available_now, trigger_seconds)
 
 
 def semantic_ingest_stream(stream_vecs: DataFrame, index_path: str,
@@ -599,13 +619,13 @@ def semantic_ingest_stream(stream_vecs: DataFrame, index_path: str,
     if not meta.get("store_vectors"):
         raise ValueError("semantic_ingest_stream needs an index "
                          "written with store_vectors=True")
-    if maintain_every is not None and maintain_every < 1:
-        raise ValueError(f"maintain_every must be >= 1, "
-                         f"got {maintain_every}")
-    if maintain_every is not None and not admit:
-        raise ValueError("maintain_every without admit=True has "
-                         "nothing to compact — the stream never "
-                         "appends to the index")
+    # the hook folds away replay-duplicate id rows and compacts the
+    # batch-sized append files; staging_path=None (this lane appends
+    # directly into the index) and the stream's OWN checkpoint is never
+    # touched
+    maintain_due = _maintain_hook(
+        spark, index_path, maintain_every, admit,
+        lambda: ivfpq_maintain(spark, index_path, None, dedup_ids=True))
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     margin = (2.0 * (2.0 * (1.0 - threshold)) ** 0.5
               if probe_margin == "auto" else probe_margin)
@@ -661,27 +681,11 @@ def semantic_ingest_stream(stream_vecs: DataFrame, index_path: str,
                 ).filter(F.col("cell").isNotNull()) \
                     .write.mode("append").partitionBy("cell") \
                     .parquet(index_path)
-                if (maintain_every is not None
-                        and batch_id % maintain_every
-                        == maintain_every - 1):
-                    # fold away replay-duplicate id rows and compact
-                    # the batch-sized append files; staging_path=None
-                    # (this lane appends directly into the index) and
-                    # the stream's OWN checkpoint is never touched
-                    ivfpq_maintain(spark, index_path, None,
-                                   dedup_ids=True)
-                    # the swap is a directory rename outside Spark's
-                    # write path — drop any cached listings/plans for
-                    # the old directory contents
-                    spark.catalog.refreshByPath(index_path)
+                maintain_due(batch_id)
 
     w = (stream_vecs.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    return _start(w, available_now, trigger_seconds)
 
 
 def run_to_memory(stream_df: DataFrame, table_name: str,
@@ -724,11 +728,7 @@ def write_stream_parquet(stream_df: DataFrame, path: str,
     )
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w.start()
+    return _start(w, available_now, trigger_seconds)
 
 
 def ivfpq_append_stream(stream_df: DataFrame, index_path: str,
